@@ -5,56 +5,12 @@ Every implemented operator registers here with a name, a callable
 DuckDB oracle SQL string over the pre-registered table views
 (``region nation customer supplier part orders lineitem events
 documents embeddings``). ``__spark_entry__.py`` re-exports these for
-the driver's correctness harness.
-
-Verification-priority order is LEDGER-DRIVEN, not hand-maintained.
-The driver's correctness harness walks ``queries()`` in iteration
-order under a ~50-row budget, so the order decides which entries get
-a fresh hard-signal row each round. Rounds 8 and 9 both shipped
-hand-curated ``_PRIORITY`` heads whose arithmetic went stale within
-one round (r8 verdict #6, r9 verdict #1 + ADVICE). The fix is to
-stop hand-writing it: ``load_all()`` reads the committed
-``CORRECTNESS_r*.json`` ledgers and orders oracled entries by
-
-    (latest fully-green ledger round, md5(name))
-
-ascending — so never-ledgered entries (round 0) and entries whose
-LATEST row was not fully green (requeued as round 0) always iterate
-first, the stalest-rowed entries fill the rest of the budget, and
-the md5 tiebreak interleaves families so a bursty host steal-window
-cannot contaminate a whole family at once (the r04
-alphabetical-block anomaly, see DEVNOTES). Rows-only entries (no
-ANSI oracle by design) stay permanently last — a driver slot spent
-on an ``err: no_oracle`` row is a wasted slot (r7 verdict #5).
-
-PLAN-EPOCH REQUEUE (r11 verdict #1): a green ledger row certifies
-the *implementation that existed when the driver ran it*. Round 11
-rewrote the physical plans of ~12 heavy operators but their r10
-rows kept them out of the r11 budget — the ledger round alone
-cannot see that an entry's code changed. So each entry also carries
-a content FINGERPRINT (sha256 over the query function's source, the
-transitive closure of package-defined callables it references by
-global name, and its oracle SQL). ``LEDGER_EPOCH.json`` at the repo
-root snapshots the fingerprint each entry had when its latest
-driver row landed (refreshed per round by
-``tools/snapshot_epoch.py``); ``load_all()`` treats a mismatch —
-or an entry missing from the snapshot — as round 0, requeuing it at
-the head of the next driver budget. Docstring-only or verified
-non-behavioral edits can be exempted with the tool's ``--refresh``
-flag so they don't burn a driver slot (rationale goes in DEVNOTES).
-``tests/test_registry_budget.py`` asserts the ordering invariants,
-including the epoch requeue.
+the driver's correctness harness. Iteration order is registration
+order; every consumer that needs a stable order sorts by name.
 """
 
 from __future__ import annotations
 
-import glob
-import hashlib
-import inspect
-import json
-import os
-import re
-import types
 from collections.abc import Callable
 from typing import Optional
 
@@ -80,279 +36,10 @@ def query(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryF
     return deco
 
 
-# Rows-only entries (no ANSI oracle by design — GK sketch, LSH
-# recall-bounded, HLL-sketch profile). Their assurance comes from
-# pytest error/recall bounds, not driver slots; a driver row for them
-# can only ever read `err: no_oracle`. Permanently last in iteration
-# order (r7 verdict #5). Kept as documentation; the tail is DERIVED
-# from ORACLES membership so a new oracle-less entry can't silently
-# jump the queue.
-_ROWS_ONLY_TAIL: list[str] = [
-    "value_percentiles",
-    "approx_distinct_words",
-    "sim_search_lsh",
-    "profile_table_sketch",
-]
-
-
-def _row_green(row: object) -> bool:
-    """True iff a driver ledger row is a full oracled pass
-    (rows + schema + hash matched, no error). Anything else —
-    including the designed ``err: no_oracle`` rows — does not count
-    as verification coverage for ordering purposes."""
-    if not isinstance(row, dict):
-        return False
-    return bool(
-        row.get("rows_match")
-        and row.get("schema_match")
-        and row.get("hash_match")
-        and not row.get("err")
-    )
-
-
-def _ledger_rounds(repo_root: Optional[str] = None) -> dict[str, int]:
-    """Latest ledger round per query name from CORRECTNESS_r*.json.
-
-    An entry whose LATEST row was not fully green maps to 0 — it
-    requeues at the head of next round's budget instead of waiting
-    out a full rotation. Missing/unparsable files are skipped (the
-    registry must still import on a bare checkout)."""
-    if repo_root is None:
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict[str, tuple[int, object]] = {}
-    for path in glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", os.path.basename(path))
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name, row in data.items():
-            if name not in latest or rnd > latest[name][0]:
-                latest[name] = (rnd, row)
-    return {
-        name: (rnd if _row_green(row) else 0)
-        for name, (rnd, row) in latest.items()
-    }
-
-
-def priority_key(name: str, rounds: dict[str, int]) -> tuple[int, str]:
-    """Sort key for oracled entries: stalest ledger round first
-    (never-ledgered / latest-row-failed = 0), md5(name) tiebreak to
-    interleave families within a round cohort."""
-    return (rounds.get(name, 0), hashlib.md5(name.encode()).hexdigest())
-
-
-_PKG_PREFIX = "hadoop_wordcount_spark"
-EPOCH_FILE = "LEDGER_EPOCH.json"
-
-
-def _code_global_names(code: types.CodeType) -> set[str]:
-    """All global names referenced by a code object, including those
-    inside nested code objects (lambdas, comprehensions, inner defs)."""
-    names = set(code.co_names)
-    for const in code.co_consts:
-        if isinstance(const, types.CodeType):
-            names |= _code_global_names(const)
-    return names
-
-
-def _module_callables(mod: types.ModuleType) -> list[object]:
-    """Module-level functions/classes DEFINED in ``mod`` (not
-    re-exports)."""
-    out = []
-    for val in vars(mod).values():
-        if isinstance(val, (types.FunctionType, type)) and (
-            getattr(val, "__module__", "") == mod.__name__
-        ):
-            out.append(val)
-    return out
-
-
-def _is_const(val: object) -> bool:
-    """Immutable scalar (or tuple thereof) safe to repr into a
-    fingerprint. Mutable module state (memo dicts, lists) is
-    excluded — its repr is runtime-dependent."""
-    if isinstance(val, (bool, int, float, str, bytes)):
-        return True
-    if isinstance(val, (tuple, frozenset)):
-        return all(_is_const(v) for v in val)
-    return False
-
-
-def _referenced_package_objects(
-    fn: Callable,
-) -> tuple[list[object], list[tuple[str, str]]]:
-    """Transitive closure of (callables, module-level constants)
-    defined in this package that ``fn`` references. Bounds the
-    fingerprint to what the entry can actually execute: a rewrite of
-    a shared kernel (e.g. the Arrow SRP fold) changes the fingerprint
-    of every entry that reaches it, which is exactly the r11 gap —
-    helper-level rewrites left entry-level rows looking fresh.
-
-    Three reference shapes are resolved per code object (including
-    nested lambdas/inner defs): a global that IS a package function/
-    class; a global that is a package MODULE (attribute calls like
-    ``_srp_mod.srp_spark_side`` — the module's own callables all join
-    the closure, a deliberate over-approximation); and an in-function
-    ``import``/``from-import`` of a package module, whose dotted name
-    appears in co_names without ever touching ``__globals__``.
-    Constant capture closes the constant-only-tuning hole (a
-    ``_SRP_BITS`` change must requeue the SRP family): a referenced
-    global that is an immutable scalar/tuple joins the fingerprint as
-    ``(module.name, repr)``. Runtime-mutable globals (memo dicts) and
-    monkeypatch targets are the caller's responsibility to leave at
-    committed values when fingerprinting (load_all runs at import,
-    before any patching)."""
-    import sys
-
-    seen: dict[int, object] = {}
-    seen_mods: set[str] = set()
-    consts: dict[str, str] = {}
-    stack: list[object] = [fn]
-
-    def push_module(mod: types.ModuleType) -> None:
-        if mod.__name__ in seen_mods:
-            return
-        seen_mods.add(mod.__name__)
-        stack.extend(_module_callables(mod))
-
-    while stack:
-        obj = stack.pop()
-        if id(obj) in seen:
-            continue
-        if isinstance(obj, type):
-            seen[id(obj)] = obj
-            for meth in vars(obj).values():
-                if isinstance(meth, (staticmethod, classmethod)):
-                    meth = meth.__func__
-                if isinstance(meth, types.FunctionType):
-                    stack.append(meth)
-            continue
-        seen[id(obj)] = obj
-        code = getattr(obj, "__code__", None)
-        glb = getattr(obj, "__globals__", None)
-        if code is None or glb is None:
-            continue
-        for name in sorted(_code_global_names(code)):
-            # In-function imports: the dotted module path sits in
-            # co_names; resolve through sys.modules (operator modules
-            # are all imported by load_all before fingerprinting).
-            if name.startswith(_PKG_PREFIX):
-                mod = sys.modules.get(name)
-                if mod is not None:
-                    push_module(mod)
-                continue
-            if name not in glb:
-                continue
-            ref = glb[name]
-            if id(ref) in seen:
-                continue
-            if isinstance(ref, types.ModuleType):
-                if (ref.__name__ or "").startswith(_PKG_PREFIX):
-                    push_module(ref)
-                continue
-            owner = glb.get("__name__", "?")
-            if _is_const(ref) and str(owner).startswith(_PKG_PREFIX):
-                consts.setdefault(f"{owner}.{name}", repr(ref))
-                continue
-            if not (getattr(ref, "__module__", "") or "").startswith(
-                _PKG_PREFIX
-            ):
-                continue
-            if isinstance(ref, (types.FunctionType, type)):
-                stack.append(ref)
-    return list(seen.values()), sorted(consts.items())
-
-
-def _referenced_package_callables(fn: Callable) -> list[object]:
-    return _referenced_package_objects(fn)[0]
-
-
-def _source_of(obj: object) -> str:
-    try:
-        return inspect.getsource(obj)  # type: ignore[arg-type]
-    except (OSError, TypeError):
-        return repr(obj)
-
-
-# Per-object (qual, source) memo (r12 ADVICE: load_all() is called
-# several times per test session and each fingerprint's transitive
-# closure re-runs inspect.getsource over large parts of the package —
-# O(entries x package-source) per call). Keyed by object identity:
-# a callable's on-disk source cannot change under a live object (an
-# edit only lands through a module reload, which creates NEW function
-# objects), and every memoized object is strongly held by its module,
-# so ids stay valid. Constants are deliberately NOT memoized — their
-# reprs are re-read from live module globals on every call, so
-# in-process tuning (a monkeypatched _SRP_BITS) still changes the
-# fingerprint, as the epoch tests pin. The fingerprint VALUE is
-# unchanged by the memo (same bytes hashed), so LEDGER_EPOCH
-# snapshots stay valid.
-_QUAL_SRC_MEMO: dict[int, tuple[str, str]] = {}
-
-
-def _qual_and_source(obj: object) -> tuple[str, str]:
-    cached = _QUAL_SRC_MEMO.get(id(obj))
-    if cached is not None:
-        return cached
-    qual = f"{getattr(obj, '__module__', '?')}.{getattr(obj, '__qualname__', '?')}"
-    pair = (qual, _source_of(obj))
-    _QUAL_SRC_MEMO[id(obj)] = pair
-    return pair
-
-
-def entry_fingerprint(name: str) -> str:
-    """Content fingerprint of a registered entry: sha256 over its
-    query function's source, the sources of every package-defined
-    callable it transitively references, and its oracle SQL string.
-    A driver ledger row is only FRESH while this fingerprint matches
-    the one snapshotted when the row landed (LEDGER_EPOCH.json).
-    Referenced module-level scalar/tuple constants are hashed by
-    repr, so constant-only tuning (a ``_SRP_BITS`` bump) requeues
-    too; mutable globals (memo dicts) stay outside the hash.
-    Per-callable (qual, source) lookups are memoized for the process
-    lifetime (see _QUAL_SRC_MEMO); the closure walk and constant
-    reprs run live on every call."""
-    fn = QUERIES[name]
-    callables, consts = _referenced_package_objects(fn)
-    parts = [_qual_and_source(obj) for obj in callables]
-    parts.sort()
-    parts.extend(consts)
-    h = hashlib.sha256()
-    for qual, src in parts:
-        h.update(qual.encode())
-        h.update(b"\x00")
-        h.update(src.encode())
-        h.update(b"\x00")
-    h.update(ORACLES.get(name, "").encode())
-    return h.hexdigest()
-
-
-def _epoch_fingerprints(repo_root: Optional[str] = None) -> Optional[dict]:
-    """The committed fingerprint snapshot, or None when absent or
-    unparsable (bare checkout — epoch requeue is then a no-op and
-    ordering falls back to pure ledger rounds)."""
-    if repo_root is None:
-        repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(repo_root, EPOCH_FILE)
-    try:
-        with open(path) as f:
-            data = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
-    return data if isinstance(data, dict) else None
-
-
 def load_all() -> None:
-    """Import every operator module so its queries register, then
-    reorder the registry: oracled entries stalest-ledger-round first
-    (md5-interleaved within a cohort), rows-only entries last."""
+    """Import every operator, source and streaming module so its
+    queries register. Idempotent: a module registers only on its
+    first import."""
     # Imports are side-effecting (decorator registration).
     from hadoop_wordcount_spark.operators import (  # noqa: F401
         corpus,
@@ -370,26 +57,3 @@ def load_all() -> None:
     )
     from hadoop_wordcount_spark.sources import pydatasource  # noqa: F401
     from hadoop_wordcount_spark.streaming import stream_queries  # noqa: F401
-
-    rounds = _ledger_rounds()
-    epoch = _epoch_fingerprints()
-    if epoch is not None:
-        # Plan-epoch requeue: a ledgered entry whose implementation
-        # changed since its row landed (fingerprint mismatch, or no
-        # snapshot at all) re-verifies as round 0.
-        for n in QUERIES:
-            if n in ORACLES and rounds.get(n, 0) > 0:
-                if epoch.get(n) != entry_fingerprint(n):
-                    rounds[n] = 0
-    oracled = sorted(
-        (n for n in QUERIES if n in ORACLES),
-        key=lambda n: priority_key(n, rounds),
-    )
-    rows_only = [n for n in QUERIES if n not in ORACLES]
-    ordered = {n: QUERIES[n] for n in oracled}
-    ordered.update({n: QUERIES[n] for n in rows_only})
-    QUERIES.clear()
-    QUERIES.update(ordered)
-    oracles = {n: ORACLES[n] for n in QUERIES if n in ORACLES}
-    ORACLES.clear()
-    ORACLES.update(oracles)

@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+import bisect
+
 from hadoop_wordcount_spark import registry
 from hadoop_wordcount_spark.operators.dedup import (
     IVF_COSINE_ORACLE,
@@ -399,13 +401,16 @@ def test_linear_interpolate_geometry(spark):
             else:
                 assert r["value"] is not None
         vals = {r["bkt"]: r["value"] for r in rs if r["value"] is not None}
+        # Observed buckets all carry a value (asserted above), so the
+        # previous/next observed bucket is a bisect into one sorted list.
+        obs_bkts = sorted({o["bkt"] for o in obs})
         for r in rs:
             if r["kind"] != "interpolated":
                 continue
-            pb = max(b for b in vals if b < r["bkt"] and
-                     any(o["bkt"] == b for o in obs))
-            nb = min(b for b in vals if b > r["bkt"] and
-                     any(o["bkt"] == b for o in obs))
+            i = bisect.bisect_left(obs_bkts, r["bkt"])
+            j = bisect.bisect_right(obs_bkts, r["bkt"])
+            assert 0 < i and j < len(obs_bkts), (tp, r["bkt"])
+            pb, nb = obs_bkts[i - 1], obs_bkts[j]
             bounds = sorted([vals[pb], vals[nb]])
             assert bounds[0] - 1e-9 <= r["value"] <= bounds[1] + 1e-9
 

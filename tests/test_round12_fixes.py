@@ -1,8 +1,8 @@
 """Round-12 pins: the cross-engine half-away rounding helper used by
 the Arrow kernels (r11 ADVICE — np.round is half-even while Spark
 F.round/HALF_UP and DuckDB round() are half-away), the SRP dim guard,
-the MinHash NULL-tokens propagation, and the registry plan-epoch
-requeue machinery's fingerprint sensitivity.
+the MinHash NULL-tokens propagation, and the shipmonth histogram
+rewrite's equality with the direct WITHIN GROUP aggregates.
 """
 
 from __future__ import annotations
@@ -126,25 +126,6 @@ def test_minhash_featurize_propagates_null_tokens(spark):
     assert len(rows[1]["sig"]) == 8
 
 
-def test_entry_fingerprint_sees_helper_rewrites():
-    """The plan-epoch fingerprint must cover package-defined helpers
-    an entry reaches transitively — the exact r11 gap (kernel
-    rewrites left entry rows looking fresh). Spot-check: the SRP
-    kernel module's source participates in dedup_embedding_srp's
-    fingerprint, and fingerprints are stable across calls."""
-    from hadoop_wordcount_spark import registry
-    from hadoop_wordcount_spark.functions import srp as srp_mod
-
-    registry.load_all()
-    fp1 = registry.entry_fingerprint("dedup_embedding_srp")
-    assert fp1 == registry.entry_fingerprint("dedup_embedding_srp")
-    closure = registry._referenced_package_callables(
-        registry.QUERIES["dedup_embedding_srp"]
-    )
-    mods = {getattr(o, "__module__", "") for o in closure}
-    assert srp_mod.__name__ in mods, sorted(mods)
-
-
 def test_shipmonth_histogram_matches_within_group_aggs(spark):
     """The round-12 histogram rewrite of shipmonth_price_percentiles
     (value-histogram + cumulative-count rank lookups) must return
@@ -235,29 +216,3 @@ def test_q2_packed_argmin_matches_struct_min(spark):
     plan = new._jdf.queryExecution().executedPlan().toString()
     assert "SortAggregate" not in plan
     assert "ObjectHashAggregate" not in plan
-
-
-def test_entry_fingerprint_sees_constant_tuning(monkeypatch):
-    """Constant-only tuning (e.g. a _SRP_BITS bump) must change the
-    fingerprint of entries that read the constant — module-level
-    scalar/tuple globals are hashed by repr."""
-    from hadoop_wordcount_spark import registry
-    from hadoop_wordcount_spark.functions import srp as srp_mod
-
-    registry.load_all()
-    before = registry.entry_fingerprint("dedup_embedding_srp")
-    monkeypatch.setattr(srp_mod, "_SRP_BITS", srp_mod._SRP_BITS + 8)
-    after = registry.entry_fingerprint("dedup_embedding_srp")
-    assert before != after
-    monkeypatch.undo()
-    assert registry.entry_fingerprint("dedup_embedding_srp") == before
-    # Mutable globals (session-keyed memo dicts) stay OUTSIDE the
-    # hash — their repr is runtime state, not implementation.
-    from hadoop_wordcount_spark.operators import similarity
-
-    fp0 = registry.entry_fingerprint("ann_ivf_search")
-    similarity._IVF_MEMO["fp-test-key"] = ("x", "y")
-    try:
-        assert registry.entry_fingerprint("ann_ivf_search") == fp0
-    finally:
-        similarity._IVF_MEMO.pop("fp-test-key", None)

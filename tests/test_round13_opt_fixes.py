@@ -70,11 +70,30 @@ def test_bucketed_cogroup_isolates_users(spark):
     assert rows == {100: 0, 200: -1}
 
 
-def test_cogroup_merge_asof_matches_per_user_reference(spark):
+@pytest.mark.parametrize("shuffle_partitions", ["session", "auto"])
+def test_cogroup_merge_asof_matches_per_user_reference(
+    spark, monkeypatch, shuffle_partitions
+):
     """The bucketed query must equal a per-purchase correlated
-    max-click reference computed with plain joins."""
+    max-click reference computed with plain joins — also when the
+    shuffle-partitions conf is non-numeric ("auto" on managed
+    deployments), which takes the default-parallelism bucket count.
+    Spark rejects setting "auto" locally, so the conf read is patched."""
+    from pyspark.sql.conf import RuntimeConfig
+
     from hadoop_wordcount_spark.sources.tables import load_table
 
+    reads = []
+    if shuffle_partitions == "auto":
+        real_get = RuntimeConfig.get
+
+        def get(self, key, *args, **kwargs):
+            if key == "spark.sql.shuffle.partitions":
+                reads.append(key)
+                return "auto"
+            return real_get(self, key, *args, **kwargs)
+
+        monkeypatch.setattr(RuntimeConfig, "get", get)
     got = {
         (r["event_id"], r["user_id"]): r["gap_s"]
         for r in registry.QUERIES["cogroup_merge_asof"](spark, SF).collect()
@@ -103,6 +122,8 @@ def test_cogroup_merge_asof_matches_per_user_reference(spark):
     )
     ref = {(r["event_id"], r["user_id"]): r["gap_s"] for r in ref_df.collect()}
     assert got == ref
+    if shuffle_partitions == "auto":
+        assert reads, "the patched conf read was never reached"
 
 
 # --- basket_part_pairs: in-array expansion == former self-join -------------
