@@ -5,7 +5,8 @@ factor and print ONE JSON line:
      "queries": {name: sec, ...}, "sf": ...}
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the CPUs this process may use; the
+     canary probes below still assume a 32-core host).
 
 Each query is fully materialized via a count-ish action
 (``df.write.format("noop")``) so the measured time includes the whole

@@ -14,6 +14,19 @@ exact semantics of Hadoop's ``checkOutputSpecs``, ``WordCount.java:35``).
 Fixed here: the reference drops ToolRunner's ``-D`` options on the
 floor (``new Job()`` without conf, ``WordCount.java:30``) — our
 ``--conf k=v`` flags genuinely reach the session.
+
+Plan of one run (3 Spark jobs under AQE): (1) scan + tokenize +
+partial count, hash shuffle on ``word``; (2) final count per shuffle
+partition, then one single-partition exchange of the aggregated
+vocabulary; (3) the single writing task sorts it by word and writes
+the part file. A global ``orderBy`` would add a range-sampling job and
+a range shuffle only to funnel everything into one task again.
+
+Trade-off at large vocabularies: the sort runs in one task, like the
+reference's single reducer (a global sort feeding one output file
+ends in one task either way). Spark's external sorter spills to disk
+past memory rather than failing, and the exchange moves the distinct
+words (already combined map-side), never the tokens.
 """
 
 from __future__ import annotations
@@ -21,6 +34,7 @@ from __future__ import annotations
 import argparse
 import sys
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hadoop_wordcount_spark.operators.wordcount import word_count
@@ -28,19 +42,24 @@ from hadoop_wordcount_spark.session import get_spark
 from hadoop_wordcount_spark.sources.textfiles import read_lines
 
 
+def output_frame(spark, input_paths: list[str]) -> DataFrame:
+    """The one-column ``word\\tcount`` frame that ``run`` writes.
+
+    Single sorted output file = the reference's single-reducer layout
+    (O8/O9). The single-partition step lives ONLY here in the sink; the
+    aggregation itself runs parallel over the shuffle partitions.
+    """
+    counts = word_count(read_lines(spark, input_paths))
+    return (
+        counts.repartition(1)
+        .sortWithinPartitions("word")
+        .select(F.concat_ws("\t", F.col("word"), F.col("count")))
+    )
+
+
 def run(spark, input_paths: list[str], output_path: str, save_mode: str = "error") -> None:
     """Programmatic entry (the reference's E2 ``Tool.run`` analog)."""
-    lines = read_lines(spark, input_paths)
-    counts = word_count(lines).orderBy("word")
-    # Single sorted output file = the reference's single-reducer
-    # layout (O8/O9). coalesce(1) lives ONLY here in the sink; the
-    # aggregation itself ran fully parallel.
-    (
-        counts.select(F.concat_ws("\t", F.col("word"), F.col("count")))
-        .coalesce(1)
-        .write.mode(save_mode)
-        .text(output_path)
-    )
+    output_frame(spark, input_paths).write.mode(save_mode).text(output_path)
 
 
 def main(argv: list[str] | None = None) -> int:

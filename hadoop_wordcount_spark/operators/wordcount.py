@@ -59,13 +59,25 @@ def tokens_col(text: Column) -> Column:
     adjacent/leading/trailing delimiters where StringTokenizer yields
     nothing — the explicit filter is the fidelity point
     (``MapClass.java:22`` vs Spark split semantics).
+
+    The filter is a higher-order function, evaluated interpreted per
+    element. Where the tokens are flattened anyway, filter the rows
+    after ``explode`` instead, as ``tokenize`` does.
     """
     return F.filter(F.split(text, " ", -1), lambda w: w != "")
 
 
 def tokenize(df: DataFrame, text_col: str = "value") -> DataFrame:
-    """Flatten lines/documents into one row per token (column ``word``)."""
-    return df.select(F.explode(tokens_col(F.col(text_col))).alias("word"))
+    """Flatten lines/documents into one row per token (column ``word``).
+
+    Same tokens as ``explode(tokens_col(...))``, but the empty ones are
+    dropped by a row ``Filter`` after ``explode`` instead of the lambda
+    inside ``tokens_col``: both ``Generate`` and ``Filter`` are
+    whole-stage code-generated, the lambda is not (the
+    ``bootstrap_ci_poisson`` lesson in DEVNOTES).
+    """
+    words = df.select(F.explode(F.split(F.col(text_col), " ", -1)).alias("word"))
+    return words.where(F.col("word") != "")
 
 
 def word_count(df: DataFrame, text_col: str = "value") -> DataFrame:

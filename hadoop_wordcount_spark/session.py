@@ -22,7 +22,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# The CPUs this process may use (its affinity mask, which a container's
+# cpuset also narrows), not the host's core count.
+DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def _default_driver_memory() -> str:

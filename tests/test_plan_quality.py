@@ -593,3 +593,47 @@ def test_referential_integrity_mixed_join_strategies(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
     assert "Window" not in plan
+
+
+def _corpus(tmp_path, n_files=4):
+    paths = []
+    for i in range(n_files):
+        p = tmp_path / f"part{i}.txt"
+        p.write_text(f"alpha beta  gamma{i}\n beta delta\n\n", encoding="utf-8")
+        paths.append(str(p))
+    return paths
+
+
+def test_cli_sink_single_partition_sort_no_range_shuffle(spark, tmp_path):
+    """The CLI's order comes from one single-partition exchange into the
+    writing task, which sorts — no range-partition sampling job, no
+    range shuffle — and neither the CLI nor tokenize() evaluates a
+    lambda per token (the psi_binning/bootstrap_ci_poisson lesson)."""
+    from hadoop_wordcount_spark.cli import output_frame
+    from hadoop_wordcount_spark.operators.wordcount import tokenize
+    from hadoop_wordcount_spark.sources.textfiles import read_lines
+
+    files = _corpus(tmp_path)
+    plan = formatted_plan(output_frame(spark, files))
+    assert "rangepartitioning" not in plan, plan
+    assert plan.count("SinglePartition") == 1, plan
+    assert "hashpartitioning(word" in plan, plan
+    assert "lambdafunction" not in plan, plan
+    assert_not_in_plan(tokenize(read_lines(spark, files)), "lambdafunction")
+
+
+def test_cli_run_is_three_spark_jobs(spark, tmp_path):
+    """One cli.run = aggregation shuffle map, final aggregate into the
+    single-partition exchange, sort + write. A global orderBy would add a
+    4th: its range partitioner samples the aggregate in a job of its own."""
+    from hadoop_wordcount_spark.cli import run
+
+    sc = spark.sparkContext
+    group = f"cli-jobs-{id(tmp_path)}"
+    sc.setJobGroup(group, "cli.run job count")
+    try:
+        run(spark, _corpus(tmp_path, n_files=6), str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3

@@ -9,6 +9,10 @@ partitions (Spark's defaults for an unconfigured session)."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 import pytest
 
 from hadoop_wordcount_spark import registry
@@ -38,3 +42,19 @@ def test_parity_under_hostile_session(hostile_spark, sf_dir, name):
         hostile_spark, sf_dir, name, registry.QUERIES[name], registry.ORACLES[name]
     )
     assert mismatch is None, mismatch
+
+
+@pytest.mark.parametrize("env_cpus", [None, "3"])
+def test_default_cpus_follow_affinity_unless_overridden(env_cpus):
+    """A bare CLI run sizes local[N] and the shuffle partitions to the
+    CPUs this process may use, not a fixed 32; SPARK_GRAFT_CPUS wins."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    if env_cpus is not None:
+        env["SPARK_GRAFT_CPUS"] = env_cpus
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "from hadoop_wordcount_spark.session import DEFAULT_CPUS; print(DEFAULT_CPUS)"],
+        env=env, capture_output=True, text=True, check=True,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ).stdout.strip()
+    assert out == (env_cpus or str(len(os.sched_getaffinity(0))))

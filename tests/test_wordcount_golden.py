@@ -155,3 +155,44 @@ def test_read_lines_with_offsets(spark, corpus_file):
     assert [r["line_no"] for r in rows] == list(range(len(LINES)))
     assert [r["value"] for r in rows] == LINES
     assert all(r["file"].endswith("golden.txt") for r in rows)
+
+
+# UTF-16 code-unit order puts the astral emoji (surrogate 0xD83D) before
+# the fullwidth "！" (0xFF01); UTF-8 byte order, the reference's Text
+# comparator, puts it after. "Z" < "z" < "é" in both.
+BYTE_ORDER_TOKENS = ["！", "\U0001F600", "é", "Z", "z", "tab\tinside", "b", "a"]
+
+
+def test_cli_byte_order_across_aggregate_partitions(spark, tmp_path):
+    """Several aggregate partitions feed the one sorting/writing task:
+    the single part file must be byte-equal to counts sorted by UTF-8."""
+    expected = {}
+    paths = []
+    for i in range(9):
+        toks = BYTE_ORDER_TOKENS[i % len(BYTE_ORDER_TOKENS):] + [f"w{i}", "a"]
+        p = tmp_path / f"in{i}.txt"
+        p.write_text("  ".join(toks) + "\n" + " ".join(toks[::-1]) + " \n", encoding="utf-8")
+        paths.append(str(p))
+        for t in toks:
+            expected[t] = expected.get(t, 0) + 2
+    want = "".join(
+        f"{w}\t{expected[w]}\n" for w in sorted(expected, key=str.encode)
+    ).encode("utf-8")
+
+    # --conf reaches the shared test session (getOrCreate applies it):
+    # 8 aggregate partitions that AQE may not merge into one.
+    confs = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    out = tmp_path / "out"
+    try:
+        flags = [a for k, v in confs.items() for a in ("--conf", f"{k}={v}")]
+        assert cli_main([*paths, str(out), *flags]) == 0
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    parts = [f for f in os.listdir(out) if f.startswith("part-")]
+    assert len(parts) == 1
+    assert (out / parts[0]).read_bytes() == want
