@@ -927,7 +927,7 @@ def q_sql_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     build sides are bounded and AQE right-sizes the exchanges."""
     from hadoop_wordcount_spark.sources.tables import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("customer", "orders", "lineitem"))
     return spark.sql("""
         SELECT /*+ SHUFFLE_HASH(orders, customer) */ l_orderkey,
                round(sum(CAST(round(l_extendedprice * (1 - l_discount) * 100, 0) AS BIGINT)) / 100e0, 2) AS revenue,
@@ -964,7 +964,7 @@ def q_sql_pipe_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrame path, and the pipe path over the same tables."""
     from hadoop_wordcount_spark.sources.tables import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("lineitem",))
     return spark.sql("""
         FROM lineitem
         |> WHERE l_quantity < 24 AND l_discount BETWEEN 0.05 AND 0.07
@@ -4460,7 +4460,7 @@ def q_null_semantics_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from hadoop_wordcount_spark.sources.tables import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("customer", "orders"))
     return spark.sql("""
         WITH sub AS (SELECT nullif(c_nationkey, 13) AS k FROM customer),
         probe AS (SELECT o_orderkey, o_custkey % 25 AS x FROM orders)
@@ -5578,7 +5578,7 @@ def q_sql_listagg_nation_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     string_agg(expr, sep ORDER BY ...)."""
     from hadoop_wordcount_spark.sources.tables import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("customer", "nation"))
     return spark.sql("""
         WITH ranked AS (
             SELECT n.n_name, c.c_name, c.c_acctbal,
@@ -5622,7 +5622,7 @@ def q_sql_group_by_all_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline."""
     from hadoop_wordcount_spark.sources.tables import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("orders",))
     return spark.sql("""
         SELECT o_orderpriority,
                year(o_orderdate) AS order_year,
@@ -5781,7 +5781,7 @@ def q_sql_unpivot_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange is the upstream groupBy."""
     from hadoop_wordcount_spark.sources.tables import register_views
 
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, ("orders",))
     return spark.sql("""
         WITH wide AS (
             SELECT o_orderpriority,

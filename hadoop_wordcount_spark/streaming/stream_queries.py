@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_wordcount_spark.registry import query
-from hadoop_wordcount_spark.sources.tables import load_table, table_path
+from hadoop_wordcount_spark.sources.tables import load_table, raw_table
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -41,7 +41,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds), which are session-timezone-free and match DuckDB's
     ``epoch_ns(...) // 1e9`` on the naive timestamps exactly."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    raw_schema = raw_table(spark, sf_dir, "events").schema
     # FileStreamSource requires a directory or a glob — a bare file
     # path fails basePath resolution. The char-class glob matches
     # exactly events.parquet while keeping the parent dir as basePath.
@@ -360,7 +360,7 @@ def q_streaming_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     file source swaps for the crawl queue and the same plan runs
     micro-batched."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    schema = raw_table(spark, sf_dir, "documents").schema
     raw = spark.readStream.schema(schema).parquet(f"{sf_dir}/[d]ocuments.parquet")
     from hadoop_wordcount_spark.operators.wordcount import tokens_col
 
@@ -592,7 +592,7 @@ def q_streaming_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     space bounds state, not the stream length."""
     from hadoop_wordcount_spark.operators.wordcount import tokens_col
 
-    schema = spark.read.parquet(table_path(sf_dir, "documents")).schema
+    schema = raw_table(spark, sf_dir, "documents").schema
     docs = spark.readStream.schema(schema).parquet(f"{sf_dir}/[d]ocuments.parquet")
     counts = (
         docs.select(F.explode(tokens_col(F.col("text"))).alias("word"))

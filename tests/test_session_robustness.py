@@ -10,12 +10,15 @@ partitions (Spark's defaults for an unconfigured session)."""
 from __future__ import annotations
 
 import os
+import shutil
 import subprocess
 import sys
+import uuid
 
 import pytest
 
 from hadoop_wordcount_spark import registry
+from tests.conftest import SF_SMALL
 from tests.oracle_utils import compare_query
 
 registry.load_all()
@@ -58,3 +61,83 @@ def test_default_cpus_follow_affinity_unless_overridden(env_cpus):
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     ).stdout.strip()
     assert out == (env_cpus or str(len(os.sched_getaffinity(0))))
+
+
+# --- per-session table resolution -------------------------------------
+
+SF_MEDIUM = os.path.join(os.path.dirname(SF_SMALL), "sf0.01")
+
+
+def _jobs(spark, fn):
+    """Run ``fn`` and return (its result, the Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"tables-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "load_table job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    return sorted(df.collect())
+
+
+def test_load_table_resolves_each_file_once_per_session(spark, tmp_path):
+    from hadoop_wordcount_spark.sources.tables import load_table
+
+    shutil.copyfile(f"{SF_SMALL}/customer.parquet", tmp_path / "customer.parquet")
+    first, n_first = _jobs(spark, lambda: load_table(spark, str(tmp_path), "customer"))
+    again, n_again = _jobs(spark, lambda: load_table(spark, str(tmp_path), "customer"))
+    assert n_first >= 1
+    assert n_again == 0
+    assert _rows(again) == _rows(first)
+    assert len(_rows(first)) == 150
+
+    # /x and file:///x are one file, so one entry.
+    uri, n_uri = _jobs(spark, lambda: load_table(spark, tmp_path.as_uri(), "customer"))
+    assert n_uri == 0
+    assert _rows(uri) == _rows(first)
+
+    # A rewrite at the same path is read again, not served stale.
+    shutil.copyfile(f"{SF_MEDIUM}/customer.parquet", tmp_path / "customer.parquet")
+    fresh, n_fresh = _jobs(spark, lambda: load_table(spark, str(tmp_path), "customer"))
+    assert n_fresh >= 1
+    assert fresh.count() == 1500
+
+    # The memo lives with the session object: a new session resolves afresh.
+    other = spark.newSession()
+    _, n_other = _jobs(other, lambda: load_table(other, str(tmp_path), "customer"))
+    assert n_other >= 1
+
+
+def test_session_reuse_across_table_directories(spark):
+    """One session, several table directories: every query reads the
+    directory it is given, never a frame or view of an earlier one."""
+    for sf in (SF_SMALL, SF_MEDIUM, SF_SMALL):
+        for name in ("sql_tpch_q3", "tpch_q1_like"):
+            mismatch = compare_query(
+                spark, sf, name, registry.QUERIES[name], registry.ORACLES[name]
+            )
+            assert mismatch is None, f"{name} @ {sf}: {mismatch}"
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "sql_tpch_q3",
+        "sql_pipe_q6",
+        "null_semantics_audit",
+        "sql_listagg_nation_top",
+        "sql_group_by_all_report",
+        "sql_unpivot_clause",
+    ],
+)
+def test_sql_query_registers_every_view_it_reads(spark, name):
+    """Each SQL query registers only its own tables, so it must name
+    all of them: it has to analyse in a session with no views."""
+    fresh = spark.newSession()
+    assert not [t for t in fresh.catalog.listTables() if t.isTemporary]
+    registry.QUERIES[name](fresh, SF_SMALL).schema
