@@ -3,7 +3,8 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash). ``tests/test_spark_entry.py`` pins
+this contract and ``tests/test_oracle_parity.py`` runs that compare.
 
 All implementations live in the ``hadoop_wordcount_spark`` package;
 this module only adapts its registry to the driver's shape.

@@ -127,9 +127,9 @@ def q_pagerank_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # executor makes the job unrecoverable where cache() could
     # recompute, and eager=True runs the job at DataFrame-CONSTRUCTION
     # time (merely building the plan executes the edge aggregate).
-    # Both are deliberate here: bench/driver runs are single-process
-    # local mode, and at deployment scale the recoverable alternative
-    # is cache()+count() at the same call sites.
+    # Both are deliberate here: the CLI, the tests and perfbench all
+    # run single-process local mode, and at deployment scale the
+    # recoverable alternative is cache()+count() at the same call sites.
     en = (
         edges.join(outw, "src")
         .select("src", "dst", (F.col("cnt").cast("double") / F.col("ow")).alias("w"))

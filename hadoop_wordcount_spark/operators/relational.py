@@ -474,8 +474,8 @@ def q_event_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse once per row, extract many paths from the binary encoding
     (no per-path re-parse), shred into columns at the scan when the
     paths stabilize. The aggregate shape is identical to the JSON
-    twin, so the two queries' costs are directly comparable in
-    BENCH.json. Oracle reads the same values via DuckDB JSON
+    twin, so the two queries can be timed side by side on the same
+    data. Oracle reads the same values via DuckDB JSON
     extraction — Variant is an encoding, not a semantics change."""
     e = _t(spark, sf_dir, "events")
     k = F.variant_get(F.parse_json(F.col("props")), "$.k", "long")

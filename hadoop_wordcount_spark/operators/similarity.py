@@ -495,8 +495,9 @@ _IVF_MEMO: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 
 
 def reset_ivf_memo() -> None:
-    """Drop memoized quantizers (bench cold mode; tests that patch
-    IVF_K mid-session already miss on the K component of the key)."""
+    """Drop memoized quantizers (perfbench's worker, between passes;
+    tests that patch IVF_K mid-session already miss on the K
+    component of the key)."""
     _IVF_MEMO.clear()
 
 
@@ -535,7 +536,8 @@ def ivf_assignments(
     knn_block_join, embedding_cell_stats, semdedup_prune) share one
     quantizer, and at 100 TB you train it once and reuse it — the
     memo is that design in-process. `reset_ivf_memo()` drops it
-    (bench cold mode calls this so per-query costs stay honest);
+    (perfbench's worker calls this between passes so per-pass
+    costs stay honest);
     keying on applicationId makes entries from a stopped session
     unreachable rather than stale."""
     kk = IVF_K if k is None else k
