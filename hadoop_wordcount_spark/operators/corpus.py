@@ -29,6 +29,7 @@ from hadoop_wordcount_spark.operators.text_analysis import NORM_TEXT_SQL
 from hadoop_wordcount_spark.operators.wordcount import tokens_col
 from hadoop_wordcount_spark.registry import query
 from hadoop_wordcount_spark.sources.tables import load_table
+from hadoop_wordcount_spark.stages import materialize
 
 _BLOCK = 512  # trainer sequence length (tokens per packed block)
 _CHUNK = 32  # RAG chunk window (tokens)
@@ -606,7 +607,7 @@ def q_curriculum_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from hadoop_wordcount_spark.operators.ranking import global_ntile
 
-    ph = global_ntile(
+    ph = materialize(global_ntile(
         d.select(
             "doc_id",
             "n_chars",
@@ -619,7 +620,7 @@ def q_curriculum_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         # small_threshold=0: the input is every document — data-sized
         # — so pin the distributed ntile and skip the size probe.
         small_threshold=0,
-    ).localCheckpoint(eager=True)
+    ))
     # ^ r13: the phased table feeds the shard-skew census AND the
     #   per-phase aggregate — materialize it once (4 small columns per
     #   doc) instead of re-deriving from the ntile per consumer.
@@ -982,13 +983,12 @@ def q_filter_funnel_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
     # total and the report, so the tokenize+regex gate pass ran TWICE
     # (guide §2.3/§5). The survival sums over the checkpointed census
     # are the same integer sums, cell-grouped instead of row-grouped.
-    cells = (
+    cells = materialize(
         per_doc.groupBy("stage_reached")
         .agg(
             F.count(F.lit(1)).alias("nd"),
             F.sum("n_words").alias("nw"),
         )
-        .localCheckpoint(eager=True)
     )
     surv = (
         cells.crossJoin(F.broadcast(stages))
@@ -1135,7 +1135,10 @@ def q_ranker_agreement_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         / (F.col("tf") + _K1 * (1 - _B + _B * F.col("dl") / F.col("avgdl")))
     )
     tfidf_term = F.col("tf") * F.log(F.col("n_docs") * 1.0 / F.col("df"))
-    scored = (
+    # r13: both rankers' top-k cuts read this candidate table —
+    # materialize it once (term-matched docs only) instead of
+    # re-running the tf/dl/stats chain per ranker.
+    scored = materialize(
         tf.join(dl, "doc_id")
         .join(F.broadcast(dfreq), "word")
         .crossJoin(F.broadcast(stats))
@@ -1144,10 +1147,6 @@ def q_ranker_agreement_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(bm25_term), 4).alias("bm25"),
             F.round(F.sum(tfidf_term), 4).alias("tfidf"),
         )
-        # r13: both rankers' top-k cuts read this candidate table —
-        # materialize it once (term-matched docs only) instead of
-        # re-running the tf/dl/stats chain per ranker.
-        .localCheckpoint(eager=True)
     )
     # Only ranks <= max(k) ever matter, so NEVER rank the full scored
     # table (a global row_number is a single-partition window — the

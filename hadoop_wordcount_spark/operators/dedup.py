@@ -27,6 +27,7 @@ from hadoop_wordcount_spark.operators.text_analysis import NORM_TEXT_SQL, norm_t
 from hadoop_wordcount_spark.operators.wordcount import tokens_col
 from hadoop_wordcount_spark.registry import query
 from hadoop_wordcount_spark.sources.tables import load_table
+from hadoop_wordcount_spark.stages import materialize
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1441,31 +1442,32 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB: near-dup graphs are forests of small cliques, so
     diameter (and round count) stays tiny; each round shuffles
-    O(edges). Each round's labels are eagerly localCheckpoint-ed so
-    the plan stays one-round deep regardless of iteration count — a
-    deep component cannot build a 20-deep lineage.
+    O(edges). Each round's labels are materialized; on a local master
+    that cuts the lineage, so the plan stays one-round deep regardless
+    of iteration count — a deep component cannot build a 20-deep
+    lineage.
     """
     pairs = _banded_verified_pairs(spark, sf_dir).select("doc_a", "doc_b")
     edges = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     ).cache()
-    labels = edges.select(F.col("doc_a").alias("doc_id")).distinct().select(
+    labels = materialize(edges.select(F.col("doc_a").alias("doc_id")).distinct().select(
         "doc_id", F.col("doc_id").alias("cluster_id")
-    ).localCheckpoint()
+    ))
     for _ in range(20):  # diameter bound; near-dup cliques converge in 2-3
         neighbor_min = (
             edges.join(labels, edges.doc_b == labels.doc_id)
             .groupBy(F.col("doc_a").alias("doc_id"))
             .agg(F.min("cluster_id").alias("nbr_min"))
         )
-        # Eager localCheckpoint: materializes this round's labels and
+        # Materialize this round's labels; on a local master this
         # TRUNCATES lineage — each iteration's plan reads the previous
         # checkpoint, never the whole join chain. The change flag is
         # computed INSIDE the same update join (nbr_min improves the
         # label iff it is strictly smaller), so the convergence check
         # is a filter over the already-materialized checkpoint — no
         # second new-vs-old join per round.
-        new_labels = (
+        new_labels = materialize(
             labels.join(neighbor_min, "doc_id", "left")
             .select(
                 "doc_id",
@@ -1474,7 +1476,6 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("cluster_id"),
                 (F.col("nbr_min") < F.col("cluster_id")).alias("chg"),
             )
-            .localCheckpoint()
         )
         changed = new_labels.filter(F.col("chg")).limit(1).count()
         labels = new_labels.select("doc_id", "cluster_id")

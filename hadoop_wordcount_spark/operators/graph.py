@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from hadoop_wordcount_spark.operators.wordcount import tokens_col
 from hadoop_wordcount_spark.registry import query
 from hadoop_wordcount_spark.sources.tables import load_table
+from hadoop_wordcount_spark.stages import materialize
 
 _DAMP = 0.85
 _ITERS = 3
@@ -96,7 +97,7 @@ def q_pagerank_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     references them every iteration, and the checkpoint keeps the
     corpus lineage out of the per-round plans); the vocabulary-sized
     rank/contribution tables broadcast, so the edge stream never
-    re-sorts. At web scale you'd loop with localCheckpoint like
+    re-sorts. At web scale you'd loop with `materialize` like
     `dedup_clusters` instead of unrolling — both patterns are in this
     engine."""
     d = _docs(spark, sf_dir)
@@ -118,27 +119,19 @@ def q_pagerank_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     outw = edges.groupBy("src").agg(F.sum("cnt").alias("ow"))
-    # Eager checkpoints instead of cache (r13): the unrolled iterations
-    # reference these tables every round, and checkpointing also cuts
-    # the corpus-sized lineage out of the final plan (745 -> ~250
+    # Materialized (r13): the unrolled iterations reference these
+    # tables every round, and on a local master the checkpoint also
+    # cuts the corpus-sized lineage out of the final plan (745 -> ~250
     # lines), so per-round planning touches edge/vocab tables only.
-    # Failure-mode note (r13 advice): localCheckpoint stores to
-    # NON-REPLICATED executor storage — on a cluster, losing an
-    # executor makes the job unrecoverable where cache() could
-    # recompute, and eager=True runs the job at DataFrame-CONSTRUCTION
-    # time (merely building the plan executes the edge aggregate).
-    # Both are deliberate here: the CLI, the tests and perfbench all
-    # run single-process local mode, and at deployment scale the
-    # recoverable alternative is cache()+count() at the same call sites.
-    en = (
+    # materialize is eager: merely building the plan runs the edge
+    # aggregate.
+    en = materialize(
         edges.join(outw, "src")
         .select("src", "dst", (F.col("cnt").cast("double") / F.col("ow")).alias("w"))
-        .localCheckpoint(eager=True)
     )
-    nodes = (
+    nodes = materialize(
         tok.select(F.explode("tk").alias("word"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     nn = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
     ranks = nodes.crossJoin(F.broadcast(nn)).select(
@@ -253,13 +246,12 @@ def q_bigram_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the triangle table three union branches — without
     # materialization the corpus-sized bigram aggregate appeared ~9x
     # in the plan (840 lines).
-    ue = (
+    ue = materialize(
         bg.filter(F.col("w1") != F.col("w2"))
         .select(
             F.least("w1", "w2").alias("a"), F.greatest("w1", "w2").alias("b")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     e1 = ue.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = ue.select(F.col("a").alias("y2"), F.col("b").alias("z"))
@@ -345,7 +337,7 @@ def q_label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFra
     round is a neighbor join + per-node argmax on the 200-edge
     broadcast-sized cut. At the general scale the same rounds run as
     shuffle joins on v — per-round cost tracks edges, and the
-    fixed-round unroll keeps the DAG static (localCheckpoint per
+    fixed-round unroll keeps the DAG static (materialize per
     round once edges outgrow memory, as dedup_clusters does)."""
     d = _docs(spark, sf_dir)
     tok = d.select(tokens_col(F.col("text")).alias("tk")).filter(
@@ -468,10 +460,10 @@ def q_bigram_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard BFS step. Edges build once from one bigram agg and are
     reused by every hop. At 100 TB the reached set is the growing
     side: production BFS checkpoints it per hop (`dedup_clusters`'
-    localCheckpoint pattern) — noted, not needed for a fixed 3-hop
+    materialize pattern) — noted, not needed for a fixed 3-hop
     DAG."""
     d = _docs(spark, sf_dir)
-    tk = F.filter(F.split(F.col("text"), " "), lambda w: w != "")
+    tk = tokens_col(F.col("text"))
     bi = d.select(tk.alias("tk")).filter(F.size("tk") >= 2).select(
         F.explode(
             F.transform(
@@ -487,12 +479,12 @@ def q_bigram_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the lazy unroll re-planned the corpus-sized distinct per hop and
     # doubled the reached-set lineage every level (the per-hop
     # checkpoint the docstring below already prescribes at scale).
-    edges = bi.select("e.src", "e.dst").distinct().localCheckpoint(eager=True)
+    edges = materialize(bi.select("e.src", "e.dst").distinct())
     reached = spark.createDataFrame([(_KHOP_SEED,)], ["word"])
     frontier = reached
     out = []
     for hop in range(1, _KHOP_LEVELS + 1):
-        nxt = (
+        nxt = materialize(
             edges.join(
                 F.broadcast(frontier.withColumnRenamed("word", "src")),
                 "src",
@@ -500,7 +492,6 @@ def q_bigram_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("dst").alias("word"))
             .distinct()
             .join(reached, "word", "left_anti")
-            .localCheckpoint(eager=True)
         )
         out.append(
             nxt.agg(
@@ -596,10 +587,9 @@ def q_hits_hubs_authorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vocabulary-sized score side of every half-step keeps the edge
     # table in place (guide §3.1) — scores are exact integer sums, so
     # join strategy cannot perturb a single bit.
-    edges = (
+    edges = materialize(
         bi.select(sp.getItem(0).alias("src"), sp.getItem(1).alias("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     a1 = edges.groupBy("dst").agg(F.count(F.lit(1)).cast("long").alias("s"))
     h1 = (

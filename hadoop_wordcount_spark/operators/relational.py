@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from hadoop_wordcount_spark.registry import query
 from hadoop_wordcount_spark.sources.tables import load_table
+from hadoop_wordcount_spark.stages import materialize
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2546,11 +2547,11 @@ def q_event_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: the distinct slot table feeds four consumers (slot count,
     # marginals, both self-join sides) — materialize the one
     # event-sized distinct instead of running it per reference.
-    s = e.select(
+    s = materialize(e.select(
         "user_id",
         F.expr("ts_ns div 3600000000000").alias("hr"),
         "event_type",
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct())
     n = s.select("user_id", "hr").distinct().agg(
         F.count(F.lit(1)).alias("n_slots")
     )
@@ -2918,9 +2919,9 @@ def q_sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_clusters' convergence loop."""
     d = _t(spark, sf_dir, "documents")
     d.createOrReplaceTempView("documents_rcte")
-    bg = spark.sql("""
+    bg = materialize(spark.sql("""
         WITH toks AS (
-            SELECT filter(split(text, ' '), w -> w <> '') AS tk
+            SELECT array_remove(split(text, ' ', -1), '') AS tk
             FROM documents_rcte),
         bi AS (
             SELECT explode(transform(sequence(1, size(tk) - 1),
@@ -2930,7 +2931,7 @@ def q_sql_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT e.w1 AS w1, e.w2 AS w2, count(*) AS c
         FROM bi GROUP BY e.w1, e.w2
         ORDER BY c DESC, w1, w2 LIMIT 200
-    """).localCheckpoint(eager=True)
+    """))
     bg.createOrReplaceTempView("bg_rcte")
     return spark.sql("""
         WITH RECURSIVE seed AS (
@@ -3090,7 +3091,7 @@ def q_orders_abc_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: the per-part rollup feeds both the global total and the
     # distributed running sum — materialize the one fact-sized
     # aggregate instead of running it per consumer.
-    pv = pv.localCheckpoint(eager=True)
+    pv = materialize(pv)
     tot = pv.agg(F.sum("val_c").alias("t_c"))
     # small_threshold=0: the per-partkey rollup is data-sized (parts
     # scale with SF), so pin the distributed path and skip the probe.
@@ -3444,10 +3445,9 @@ def q_basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY .. LIMIT compiles to TakeOrderedAndProject, so only 20
     rows reach the driver."""
     li = _t(spark, sf_dir, "lineitem")
-    baskets = (
+    baskets = materialize(
         li.groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-        .localCheckpoint(eager=True)
     )
     n = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
     pc = (
@@ -3613,19 +3613,17 @@ def q_event_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference (guide §5). `dev` itself stays lazy: it is fact-sized
     # and materializing it would be wrong at 100 TB — three events
     # scans is the exact-two-level-median minimum.
-    med = (
+    med = materialize(
         e.groupBy("event_type")
         .agg(F.median("value").alias("med"))
-        .localCheckpoint(eager=True)
     )
     dev = e.join(F.broadcast(med), "event_type").select(
         "event_type", "value", "med",
         F.abs(F.col("value") - F.col("med")).alias("ad"),
     )
-    mad = (
+    mad = materialize(
         dev.groupBy("event_type")
         .agg(F.median("ad").alias("mad"))
-        .localCheckpoint(eager=True)
     )
     return (
         dev.join(F.broadcast(mad), "event_type")
@@ -4199,7 +4197,7 @@ def q_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: the 1-row max-key scalar is re-embedded in the assigned
     # branch's plan — checkpoint it so the existing-dimension scan
     # behind it runs once, not once per reference (guide §5).
-    mx = existing.agg(F.max("sk").alias("mx")).localCheckpoint(eager=True)
+    mx = materialize(existing.agg(F.max("sk").alias("mx")))
     # small_threshold=0 pins the DISTRIBUTED rank: an incoming
     # dimension delta is data-sized by contract (it scales with the
     # batch, never a fixed bound), so the bounded demo path can never
@@ -4378,12 +4376,11 @@ def q_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this the two-window sessionization pipeline executed three
     # times (plan read 793 lines / 80 Exchanges). Session-count-sized
     # by construction, the table this sweep-line exists to shrink to.
-    iv = (
+    iv = materialize(
         e.withColumn("new_session", new_session)
         .withColumn("session_id", F.sum("new_session").over(run).cast("long"))
         .groupBy("user_id", "session_id")
         .agg(F.min("us").alias("s"), (F.max("us") + 1).alias("e"))
-        .localCheckpoint(eager=True)
     )
     pts = iv.select(
         F.col("s").alias("us"), F.lit(1).alias("delta"), "user_id", "session_id"
@@ -6304,7 +6301,7 @@ def q_orders_repeat_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: the <=13-row bucket census feeds BOTH the cumsum and the
     # grand total — materialize it once so the customer-key window
     # pass over orders runs once, not once per reference (guide §5).
-    cells = (
+    cells = materialize(
         gaps.select(
             F.least(
                 F.floor(F.col("gap") / 30.0).cast("long"), F.lit(12)
@@ -6312,7 +6309,6 @@ def q_orders_repeat_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("gap_bucket")
         .agg(F.count(F.lit(1)).alias("n_gaps"))
-        .localCheckpoint(eager=True)
     )
     cum = global_cumsum(
         cells, [("gap_bucket", False)], "n_gaps", out="c", size_hint=13
@@ -6380,10 +6376,10 @@ def q_pareto_skyline_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate filter; the pruned frontier feeds both sides of the
     # dominance anti-join — checkpoint both so the fact aggregate and
     # the pruning pass run once each.
-    cust = o.groupBy("o_custkey").agg(
+    cust = materialize(o.groupBy("o_custkey").agg(
         F.sum(cents).alias("spend_cents"),
         F.count(F.lit(1)).alias("n_orders"),
-    ).localCheckpoint(eager=True)
+    ))
     bucket = F.floor(F.col("spend_cents") / F.lit(10_000_000)).alias("bkt")
     bmax = cust.select(bucket, "n_orders").groupBy("bkt").agg(
         F.max("n_orders").alias("bkt_max")
@@ -6398,7 +6394,7 @@ def q_pareto_skyline_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bkt")
         .agg(F.max("u_max").alias("max_higher"))
     )
-    cand = (
+    cand = materialize(
         cust.withColumn("bkt", bucket)
         .join(F.broadcast(higher), "bkt")
         .filter(
@@ -6406,7 +6402,6 @@ def q_pareto_skyline_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
             | (F.col("n_orders") > F.col("max_higher"))
         )
         .select("o_custkey", "spend_cents", "n_orders")
-        .localCheckpoint(eager=True)
     )
     other = cand.select(
         F.col("spend_cents").alias("o_spend"),
@@ -6479,10 +6474,9 @@ def q_events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("b").isNotNull())
     # r13: the |types|² transition census feeds the total and the
     # entropy aggregate — checkpoint the one event-sized aggregate.
-    pairs = (
+    pairs = materialize(
         seq.groupBy("a", "b")
         .agg(F.count(F.lit(1)).alias("n_ab"))
-        .localCheckpoint(eager=True)
     )
     wa = Window.partitionBy("a")
     tot = pairs.agg(F.sum("n_ab").alias("n"))
@@ -6840,10 +6834,9 @@ def q_chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: the |langs| x |sources| contingency cell table feeds both
     # marginals, the total, and the expected-count join — checkpoint
     # the one fact-sized aggregate.
-    cell = (
+    cell = materialize(
         d.groupBy("lang", "source")
         .agg(F.count(F.lit(1)).alias("o"))
-        .localCheckpoint(eager=True)
     )
     rowm = cell.groupBy("lang").agg(F.sum("o").alias("rn"))
     colm = cell.groupBy("source").agg(F.sum("o").alias("cn"))
@@ -7053,13 +7046,12 @@ def q_supplier_herfindahl_by_type(
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     cents = F.round(F.col("l_extendedprice") * 100.0, 0).cast("long")
-    rev = (
+    # r13: the (type, supplier) rollup feeds the per-type totals
+    # AND the HHI aggregate — checkpoint the one fact-sized agg.
+    rev = materialize(
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy(F.col("p_type").alias("ptype"), F.col("l_suppkey").alias("supp"))
         .agg(F.sum(cents).alias("rc"))
-        # r13: the (type, supplier) rollup feeds the per-type totals
-        # AND the HHI aggregate — checkpoint the one fact-sized agg.
-        .localCheckpoint(eager=True)
     )
     tot = rev.groupBy("ptype").agg(
         F.sum("rc").alias("t"), F.count(F.lit(1)).alias("n_supp")
@@ -7253,16 +7245,15 @@ def q_nation_revenue_share_report(
     )
     r = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
     cents = F.round(F.col("o_totalprice") * 100.0, 0).cast("long")
-    rev = (
+    # r13: the 25-row nation rollup feeds the region rollup, the
+    # grand total AND the report join — checkpoint it so the
+    # fact-to-dim join chain runs once.
+    rev = materialize(
         o.join(c, o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy(F.col("n_name").alias("nation"), F.col("r_name").alias("region"))
         .agg(F.sum(cents).alias("rc"))
-        # r13: the 25-row nation rollup feeds the region rollup, the
-        # grand total AND the report join — checkpoint it so the
-        # fact-to-dim join chain runs once.
-        .localCheckpoint(eager=True)
     )
     reg = rev.groupBy("region").agg(F.sum("rc").alias("reg_rc"))
     tot = rev.agg(F.sum("rc").alias("t"))
@@ -7896,9 +7887,9 @@ def q_events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: the calendar-bounded hourly series feeds the global
     # moments and BOTH sides of the lag join — checkpoint it so the
     # event-sized hourly census runs once.
-    s = grid.join(cnt, "h", "left").select(
+    s = materialize(grid.join(cnt, "h", "left").select(
         "h", F.coalesce(F.col("x"), F.lit(0)).cast("long").alias("x")
-    ).localCheckpoint(eager=True)
+    ))
     glob = s.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("s1"),
@@ -8094,7 +8085,7 @@ def q_auc_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: the distinct-score table feeds both the prefix-sum chain
     # and the totals aggregate — materialize the one event-sized
     # exchange instead of running it per consumer.
-    s = s.localCheckpoint(eager=True)
+    s = materialize(s)
     c = global_cumsum(s, [("value", False)], "nn", out="cumnn").withColumn(
         "below", F.col("cumnn") - F.col("nn")
     )
@@ -8323,7 +8314,7 @@ def q_psi_feature_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # binning the plan pin inspects) feeds the totals aggregate and
     # the final report — materialize it so the fact passes (decile
     # agg + bin count) run once, not once per reference.
-    cnt = _psi_bin_counts(spark, sf_dir).localCheckpoint(eager=True)
+    cnt = materialize(_psi_bin_counts(spark, sf_dir))
     tot = cnt.agg(
         F.sum("n_ref").cast("long").alias("tr"),
         F.sum("n_cur").cast("long").alias("tc"),
@@ -8423,7 +8414,11 @@ def q_conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame
         .otherwise(2)
         .alias("part"),
     )
-    fit = (
+    # r13: the |types|-row fit table is referenced by the cal
+    # pass, the test pass AND the final report join — checkpoint
+    # it (and cal below) so the fact scan appears once per pass
+    # instead of once per reference (plan was 729 lines).
+    fit = materialize(
         lab.filter(F.col("part") == 0)
         .groupBy("event_type")
         .agg(
@@ -8434,13 +8429,8 @@ def q_conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame
                 6,
             ).alias("mu"),
         )
-        # r13: the |types|-row fit table is referenced by the cal
-        # pass, the test pass AND the final report join — checkpoint
-        # it (and cal below) so the fact scan appears once per pass
-        # instead of once per reference (plan was 729 lines).
-        .localCheckpoint(eager=True)
     )
-    cal = (
+    cal = materialize(
         lab.filter(F.col("part") == 1)
         .join(F.broadcast(fit), "event_type")
         .groupBy("event_type")
@@ -8449,7 +8439,6 @@ def q_conformal_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.percentile(F.abs(F.col("value") - F.col("mu")), F.lit(0.9)), 6
             ).alias("q90")
         )
-        .localCheckpoint(eager=True)
     )
     test = (
         lab.filter(F.col("part") == 2)
@@ -8538,10 +8527,9 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~30-row table pins ONE events pass; everything after (pair
     # self-join, medians, day count) is bounded work over it
     # (guide §5; measured 5x scan cost at the 256x rung uncached).
-    d = (
+    d = materialize(
         e.groupBy("day")
         .agg(F.count(F.lit(1)).cast("long").alias("x"))
-        .localCheckpoint(eager=True)
     )
     mn = d.agg(F.min("day").alias("m0"))
     s = d.crossJoin(F.broadcast(mn)).select(
@@ -8763,14 +8751,13 @@ def q_delete_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: each cascade level feeds the NEXT level's semi join AND its
     # own report row — checkpoint the (small, ~0.4%-selected) key sets
     # so each semi join runs once, not once per reference.
-    fs = c.filter(
+    fs = materialize(c.filter(
         F.substring(F.md5(F.col("c_custkey").cast("string")), 1, 2)
         == _FORGET_PREFIX
-    ).select("c_custkey").localCheckpoint(eager=True)
-    ords = (
+    ).select("c_custkey"))
+    ords = materialize(
         o.join(fs, o.o_custkey == fs.c_custkey, "left_semi")
         .select("o_orderkey")
-        .localCheckpoint(eager=True)
     )
     li_hit = li.join(ords, li.l_orderkey == ords.o_orderkey, "left_semi")
 

@@ -23,8 +23,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_wordcount_spark.operators.wordcount import tokens_col
 from hadoop_wordcount_spark.registry import query
 from hadoop_wordcount_spark.sources.tables import load_table
+from hadoop_wordcount_spark.stages import materialize
 
 # 256 hash buckets from the first two lowercase-hex md5 chars of the
 # stable key. Split boundaries: train = [00, cc) -> 204/256 ~ 79.7%,
@@ -127,8 +129,6 @@ def q_corpus_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself is a scan-level projection+filter — no shuffle touches
     document bodies, and the only exchange is the final per-source
     budget aggregate (|sources| rows, map-side combined)."""
-    from hadoop_wordcount_spark.operators.wordcount import tokens_col
-
     d = load_table(spark, sf_dir, "documents")
     counts = d.groupBy("source").agg(F.count(F.lit(1)).alias("n_s"))
     n_min = counts.agg(F.min("n_s").alias("n_min"))
@@ -222,15 +222,15 @@ def q_mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame
     constant-sized. Shares are integer-token ratios (exact doubles);
     pow/normalize round to 6 before comparison."""
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split("text", " ", -1), lambda w: w != ""))
+    n_tok = F.size(tokens_col(F.col("text")))
     # Cached: both normalization totals re-read the |sources|-row
     # aggregate. Each total joins back as a broadcast scalar — the
     # former empty-partition windows planned a single-partition
     # WindowExec (with its warning) over an already-tiny table.
-    per = d.groupBy("source").agg(
+    per = materialize(d.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(n_tok).alias("n_tokens"),
-    ).localCheckpoint(eager=True)  # r14: was cache(); guarantees ONE
+    ))  # r14: was cache(); guarantees ONE
     # corpus tokenize pass and bounded downstream plans (guide §5) —
     # both normalization totals and the final projection re-read this
     # |sources|-row table.
@@ -301,8 +301,6 @@ def q_dsir_importance_weight(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches the engine's other avg-of-log scores (`unigram_logprob`)
     whose round(4) parity is hash-green since r03."""
     d = load_table(spark, sf_dir, "documents")
-    from hadoop_wordcount_spark.operators.wordcount import tokens_col
-
     tok = d.select(
         "doc_id", "source", F.explode(tokens_col(F.col("text"))).alias("word")
     )
@@ -310,21 +308,19 @@ def q_dsir_importance_weight(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: the two vocabulary-sized frequency tables each feed their
     # scalar rollup AND the scoring-stream join — checkpoint both so
     # the corpus token aggregates run once, not once per reference.
-    fr = (
+    fr = materialize(
         tok.groupBy("word")
         .agg(F.count(F.lit(1)).alias("cr"))
-        .localCheckpoint(eager=True)
     )
     rs = fr.agg(
         F.count(F.lit(1)).cast("long").alias("v"),
         F.sum("cr").cast("long").alias("nr"),
     )
-    ft = (
+    ft = materialize(
         tok.crossJoin(F.broadcast(tgt))
         .filter(F.col("source") == F.col("t"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("ct"))
-        .localCheckpoint(eager=True)
     )
     ts = ft.agg(F.coalesce(F.sum("ct"), F.lit(0)).cast("long").alias("nt"))
     ratio = F.log(
@@ -451,19 +447,16 @@ def q_budget_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
     count-ahead on the dimension-bounded input).
     """
     from hadoop_wordcount_spark.operators.ranking import global_row_number
-    from hadoop_wordcount_spark.operators.wordcount import tokens_col
-
     d = load_table(spark, sf_dir, "documents")
     # r14: eager checkpoint (was cache) — the |sources|-row aggregate
     # is referenced by the total, the quota table and the rank; the
     # checkpoint guarantees ONE corpus tokenize pass independent of
     # cache-hit timing and keeps every downstream plan bounded-sized
     # (guide §5).
-    avail = (
+    avail = materialize(
         d.select("source", F.size(tokens_col(F.col("text"))).alias("nt"))
         .groupBy("source")
         .agg(F.sum("nt").cast("long").alias("n_tok"))
-        .localCheckpoint(eager=True)
     )
     tot = avail.agg(F.sum("n_tok").alias("t"))
     # Integer `div`, not floor(double /): Spark's `/` on longs is
@@ -731,21 +724,21 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r13: the |sources|-row weight and quota tables each feed two
     # consumers — checkpoint them so the fact aggregate runs once.
-    w = s.select(
+    w = materialize(s.select(
         "source",
         "n",
         sd.alias("sd"),
         F.round(F.col("n") * sd, 0).cast("long").alias("wi"),
-    ).localCheckpoint(eager=True)
+    ))
     tot = w.agg(F.sum("wi").alias("t"))
-    quota = w.crossJoin(F.broadcast(tot)).select(
+    quota = materialize(w.crossJoin(F.broadcast(tot)).select(
         "source",
         "n",
         "sd",
         "wi",
         F.expr(f"({_NEYMAN_BUDGET} * wi) div t").cast("long").alias("base"),
         ((F.lit(_NEYMAN_BUDGET) * F.col("wi")) % F.col("t")).alias("rem"),
-    ).localCheckpoint(eager=True)
+    ))
     slots = quota.agg((F.lit(_NEYMAN_BUDGET) - F.sum("base")).alias("r"))
     ranked = global_row_number(
         quota, [("rem", True), ("source", False)], out="rk", size_hint=1024

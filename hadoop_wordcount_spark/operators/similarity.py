@@ -23,6 +23,7 @@ from hadoop_wordcount_spark.functions.rounding import round_half_away
 from hadoop_wordcount_spark.functions.vectors import cosine, l2_norm
 from hadoop_wordcount_spark.registry import query
 from hadoop_wordcount_spark.sources.tables import load_table
+from hadoop_wordcount_spark.stages import materialize
 
 QUERY_VEC_ID = 0
 TOP_K = 10
@@ -525,7 +526,7 @@ def ivf_assignments(
       r11 formulations this replaced and why).
     - update: groupBy(cid, pos) mean with map-side partials; the
       exchange carries K x d rows regardless of corpus size. Each
-      round's centroid table is localCheckpoint-ed (it is tiny) so the
+      round's centroid table is materialized (it is tiny) so the
       iterative lineage stays flat — same discipline as dedup_clusters.
     Distances and centroid means are quantized to 4 decimals on BOTH
     engines so double-summation ulp noise cannot flip an assignment;
@@ -552,9 +553,9 @@ def ivf_assignments(
     vecs = emb.select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     ).cache()
-    cent = vecs.filter(F.col("vec_id") < kk).select(
+    cent = materialize(vecs.filter(F.col("vec_id") < kk).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
-    ).localCheckpoint()
+    ))
 
     def assign(cent_df: DataFrame, include_vec: bool = False) -> DataFrame:
         # Arrow-vectorized argmin kernel (the srp_spark_side
@@ -639,7 +640,7 @@ def ivf_assignments(
         assigned = assign(cent, include_vec=True)
         # No per-round checkpoint: assign() collect()s the centroid
         # table into the kernel closure, which both materializes it
-        # (one job) and cuts the lineage — an eager localCheckpoint
+        # (one job) and cuts the lineage — an eager materialize
         # here was a second job per round doing the same work (r13).
         cent = (
             assigned
@@ -657,11 +658,11 @@ def ivf_assignments(
     # The FINAL centroid table is read by every memo consumer (and by
     # the final assignment's collect below) — checkpoint it once so
     # consumers scan K rows instead of replaying the last k-means round.
-    cent = cent.localCheckpoint()
+    cent = materialize(cent)
     # Materialize the inverted file once (it is |V| (id, cid) rows —
     # tiny next to the vectors) so every memo consumer starts from the
     # same flat-lineage table instead of replaying the final assign.
-    result = (assign(cent).localCheckpoint(), cent)
+    result = (materialize(assign(cent)), cent)
     _IVF_MEMO[memo_key] = result
     return result
 
@@ -847,20 +848,18 @@ def q_embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each round's d-row product; every iteration is then a tiny job
     # over the checkpointed M and the final plan is linear in
     # _PI_ITERS. Same aggregates, bit-identical trajectory.
-    m = (
+    m = materialize(
         a.join(b, F.col("vec_id") == F.col("vid2"))
         .groupBy("i", "j")
         .agg(F.round(F.avg(F.col("va") * F.col("vb")), 6).alias("v"))
-        .localCheckpoint(eager=True)
     )
     x = ev.select("pos").distinct().select("pos", F.lit(1.0).alias("xv"))
     nrm = None
     for _ in range(_PI_ITERS):
-        y = (
+        y = materialize(
             m.join(F.broadcast(x), m.j == x.pos)
             .groupBy(F.col("i").alias("pos"))
             .agg(F.round(F.sum(F.col("v") * F.col("xv")), 6).alias("yv"))
-            .localCheckpoint(eager=True)
         )
         nrm = y.agg(F.sqrt(F.sum(F.col("yv") * F.col("yv"))).alias("nrm"))
         x = y.crossJoin(F.broadcast(nrm)).select(
@@ -1018,19 +1017,17 @@ def q_embedding_abtt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same lineage discipline as embedding_power_iteration (r13): the
     # moment matrix (d² rows) and each round's d-row product are
     # checkpointed so the unrolled loop plans linearly, not 2^k.
-    m = (
+    m = materialize(
         a.join(b, F.col("vec_id") == F.col("vid2"))
         .groupBy("i", "j")
         .agg(F.round(F.avg(F.col("va") * F.col("vb")), 6).alias("v"))
-        .localCheckpoint(eager=True)
     )
     x = ev.select("pos").distinct().select("pos", F.lit(1.0).alias("xv"))
     for _ in range(_PI_ITERS):
-        y = (
+        y = materialize(
             m.join(F.broadcast(x), m.j == x.pos)
             .groupBy(F.col("i").alias("pos"))
             .agg(F.round(F.sum(F.col("v") * F.col("xv")), 6).alias("yv"))
-            .localCheckpoint(eager=True)
         )
         nrm = y.agg(F.sqrt(F.sum(F.col("yv") * F.col("yv"))).alias("nrm"))
         x = y.crossJoin(F.broadcast(nrm)).select(
@@ -1294,9 +1291,9 @@ def _pq_train(spark: SparkSession, sf_dir: str):
         F.col("v").cast("double").alias("val"),
         (F.col("pos0") / PQ_SUBDIM).cast("int").alias("m"),
     ).cache()
-    c = ev.filter(F.col("vec_id") < PQ_K).select(
+    c = materialize(ev.filter(F.col("vec_id") < PQ_K).select(
         "m", F.col("vec_id").alias("cid"), "pos", F.col("val").alias("cval")
-    ).localCheckpoint(eager=False)
+    ))
     assign = None
     for i in range(PQ_ITERS + 1):
         d2 = (
@@ -1315,11 +1312,10 @@ def _pq_train(spark: SparkSession, sf_dir: str):
             .select("vec_id", "m", F.col("s.cid").alias("cid"))
         )
         if i < PQ_ITERS:
-            c = (
+            c = materialize(
                 ev.join(assign, ["vec_id", "m"])
                 .groupBy("m", "cid", "pos")
                 .agg(F.round(F.avg("val"), 4).alias("cval"))
-                .localCheckpoint(eager=False)
             )
     # NOTE (r13): checkpointing the final assignment was tried and
     # reverted — ReuseExchange already dedupes the two consumer
@@ -1346,7 +1342,7 @@ def q_pq_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped on (vec_id, m) — the shuffle carries one partial per
     (vector, subspace), never the |V| x K distance rows; centroid
     updates exchange K x d rows regardless of corpus size and are
-    localCheckpoint-ed so the iterative lineage stays flat (the
+    materialized so the iterative lineage stays flat (the
     `ivf_assignments` discipline, `similarity.py:402`). Distances and
     means quantize at 4 decimals on both engines; ties break on cid —
     codebooks are bit-identical, so the oracle checks the exact CODES,

@@ -38,6 +38,7 @@ from pyspark.sql.window import Window
 from hadoop_wordcount_spark.operators.wordcount import tokens_col
 from hadoop_wordcount_spark.registry import query
 from hadoop_wordcount_spark.sources.tables import load_table
+from hadoop_wordcount_spark.stages import materialize
 
 # --------------------------------------------------------------------------
 # Portable 60-bit hash (same construction as dedup's simhash chain):
@@ -626,10 +627,9 @@ def q_sketch_theta_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame
     # (before-plan: 4 corpus scans / 10 Exchanges). Checkpoint the
     # ~20 sketch payloads (~16 KB each at capacity) so the corpus is
     # read once (guide §5).
-    sk = (
+    sk = materialize(
         sh.groupBy("source")
         .agg(F.theta_sketch_agg("s", _THETA_LGK).alias("sk"))
-        .localCheckpoint(eager=True)
     )
     a, b = sk.alias("a"), sk.alias("b")
     pairs = a.join(
@@ -869,9 +869,7 @@ def q_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once, not once per reference (guide §5). The census stage's
     # partial-agg pin moved to `_dd_bucket_census` (the psi-census
     # precedent: checkpointing hides the stage from the final explain).
-    return dd_quantile_walk(
-        _dd_bucket_census(spark, sf_dir).localCheckpoint(eager=True)
-    )
+    return dd_quantile_walk(materialize(_dd_bucket_census(spark, sf_dir)))
 
 
 def _dd_bucket_census(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from hadoop_wordcount_spark.registry import query
 from hadoop_wordcount_spark.operators.wordcount import tokens_col
 from hadoop_wordcount_spark.sources.tables import load_table
+from hadoop_wordcount_spark.stages import materialize
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic
 # language identifier. Deliberately minimal and deterministic.
@@ -358,10 +359,9 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # it so the corpus tokenize+explode pass behind it runs once, not
     # once per reference (also collapses perplexity_bucket_report's
     # 706-line plan, which composes this query).
-    bg = (
+    bg = materialize(
         bi.groupBy("p")
         .agg(F.count(F.lit(1)).alias("c2"))
-        .localCheckpoint(eager=True)
     )
     c1 = bg.groupBy(F.split("p", " ").getItem(0).alias("w1")).agg(
         F.sum("c2").alias("c1")
@@ -853,10 +853,9 @@ def q_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bigram stream feeds its total and the >= 5 cut — checkpoint
     # the two corpus aggregates so each tokenize+explode runs once
     # (nb derives from the unfiltered bigram counts).
-    u = (
+    u = materialize(
         uni.groupBy("w")
         .agg(F.count(F.lit(1)).alias("c1"))
-        .localCheckpoint(eager=True)
     )
     nw = u.agg(F.sum("c1").alias("nw"))
     tk = F.col("tk")
@@ -867,10 +866,9 @@ def q_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     bi = tokd.filter(F.size("tk") >= 2).select(F.explode(bigrams).alias("p"))
-    bgu = (
+    bgu = materialize(
         bi.groupBy("p")
         .agg(F.count(F.lit(1)).alias("c2"))
-        .localCheckpoint(eager=True)
     )
     nb = bgu.agg(F.sum("c2").alias("nb"))
     bg = bgu.filter(F.col("c2") >= 5)
@@ -1246,7 +1244,7 @@ def q_ngram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     def entropy(counts: DataFrame) -> DataFrame:
         # r13: the count table feeds the total AND the entropy sum —
         # materialize the one corpus-sized aggregate per n-gram order.
-        counts = counts.localCheckpoint(eager=True)
+        counts = materialize(counts)
         tot = counts.agg(F.sum("c").alias("n"))
         pr = F.col("c") / F.col("n")
         return (
@@ -1390,10 +1388,9 @@ def q_source_token_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # more corpus passes (the r13 plan showed 8 scans / 16 Exchanges).
     # The joint is |sources| x vocab-bounded → checkpoint (guide §5,
     # the naive_bayes_langid treatment).
-    jw = (
+    jw = materialize(
         tok.groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("c_ws"))
-        .localCheckpoint(eager=True)
     )
     n = jw.agg(F.sum("c_ws").cast("long").alias("nn"))
     mw = jw.groupBy("word").agg(F.sum("c_ws").alias("c_w"))
@@ -1462,19 +1459,17 @@ def q_kl_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: both vocabulary-sized count tables feed their scalar
     # rollups AND the grid join — checkpoint them so each corpus
     # token aggregate runs once.
-    cw = (
+    cw = materialize(
         tok.groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     vs = cw.agg(
         F.count(F.lit(1)).cast("long").alias("v"),
         F.sum("c").cast("long").alias("nc"),
     )
-    sw = (
+    sw = materialize(
         tok.groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("c_sw"))
-        .localCheckpoint(eager=True)
     )
     st = sw.groupBy("source").agg(F.sum("c_sw").cast("long").alias("n_s"))
     grid = (
@@ -1592,7 +1587,7 @@ def _bpe_train(
     stage scheduling dominated runtime (optimization guide §7.3, huge
     plans). Fix: materialize the vocabulary table once after the single
     corpus-sized aggregate and each round's 1-row winner with
-    `localCheckpoint(eager=True)` — every round is then one
+    `stages.materialize` — every round is then one
     vocabulary-sized pair aggregate and the final plan is linear in
     _BPE_ROUNDS (66 lines, zero Exchanges for the merge-table union;
     218 lines / 16 Exchanges for the encode consumer). At 100 TB the checkpointed
@@ -1604,13 +1599,13 @@ def _bpe_train(
     d = _docs(spark, sf_dir)
     tok = d.select(F.explode(tokens_col(F.col("text"))).alias("word"))
     words = tok.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
-    w = words.select(
+    w = materialize(words.select(
         "word",
         "cnt",
         F.concat(
             F.lit(" "), F.regexp_replace("word", "(.)", "$1 ")
         ).alias("repr"),
-    ).localCheckpoint(eager=True)
+    ))
     merges = []
     for r in range(1, _BPE_ROUNDS + 1):
         tk = F.split(F.trim(F.col("repr")), " ")
@@ -1626,12 +1621,11 @@ def _bpe_train(
                 )
             ).alias("p"),
         ).select("cnt", "p.pa", "p.pb")
-        top = (
+        top = materialize(
             pairs.groupBy("pa", "pb")
             .agg(F.sum("cnt").alias("c"))
             .orderBy(F.desc("c"), "pa", "pb")
             .limit(1)
-            .localCheckpoint(eager=True)
         )
         merges.append(
             top.select(
@@ -2494,13 +2488,13 @@ def q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: the phrase-occurrence table feeds both the word-stat and
     # the phrase-count aggregates — materialize it so the
     # window+islands chain runs once, not twice.
-    occ = runs.filter(
+    occ = materialize(runs.filter(
         F.size("words").between(1, _RAKE_MAX_PHRASE)
     ).select(
         F.size("words").alias("plen"),
         "words",
         F.array_join("words", " ").alias("ptext"),
-    ).localCheckpoint(eager=True)
+    ))
     wstat = (
         occ.select(F.explode("words").alias("w"), "plen")
         .groupBy("w")
@@ -2759,13 +2753,12 @@ def q_heaps_law_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: the 10-point table feeds the moments aggregate AND the
     # regression join — materialize it so the two corpus passes
     # (token census + first-occurrence vocab) run once, not twice.
-    pts = (
+    pts = materialize(
         npts.join(vpts, "c")
         .select(
             F.log(F.col("n_tok").cast("double")).alias("x"),
             F.log(F.col("v").cast("double")).alias("y"),
         )
-        .localCheckpoint(eager=True)
     )
     m = pts.agg(
         F.avg("x").alias("ax"), F.avg("y").alias("ay"), F.count(F.lit(1)).alias("n")
@@ -2889,14 +2882,13 @@ def q_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same pass twice). cnt is vocabulary-sized, so checkpointing it
     # (and the |classes|-row meta below, referenced by both the
     # likelihood build and the scoring join) is executor-cheap.
-    cnt = (
+    cnt = materialize(
         tw.groupBy("c", "w")
         .agg(F.count(F.lit(1)).cast("long").alias("cw"))
-        .localCheckpoint(eager=True)
     )
     ct = cnt.groupBy("c").agg(F.sum("cw").cast("long").alias("tc"))
     vv = cnt.agg(F.countDistinct("w").cast("long").alias("v"))
-    meta = (
+    meta = materialize(
         cls.join(ct, "c")
         .crossJoin(F.broadcast(tot))
         .crossJoin(F.broadcast(vv))
@@ -2911,7 +2903,6 @@ def q_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
             "tc",
             "v",
         )
-        .localCheckpoint(eager=True)
     )
     lik = cnt.join(F.broadcast(meta.select("c", "tc", "v")), "c").select(
         "c",
@@ -3005,15 +2996,14 @@ def q_nucleus_vocab_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: the per-source frequency table feeds the totals AND the
     # ranked cumulative pass; the |sources|-row totals feed two joins
     # — checkpoint both so the corpus aggregate runs once.
-    f = (
+    f = materialize(
         tw.groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint(eager=True)
     )
-    t = f.groupBy("source").agg(
+    t = materialize(f.groupBy("source").agg(
         F.sum("cnt").cast("long").alias("tot"),
         F.count(F.lit(1)).cast("long").alias("vocab"),
-    ).localCheckpoint(eager=True)
+    ))
     w = Window.partitionBy("source").orderBy(F.desc("cnt"), F.asc("w"))
     r = f.select(
         "source",

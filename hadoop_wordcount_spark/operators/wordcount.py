@@ -57,24 +57,24 @@ def tokens_col(text: Column) -> Column:
 
     ``split`` on the single-space pattern yields empty strings for
     adjacent/leading/trailing delimiters where StringTokenizer yields
-    nothing — the explicit filter is the fidelity point
+    nothing — removing them is the fidelity point
     (``MapClass.java:22`` vs Spark split semantics).
 
-    The filter is a higher-order function, evaluated interpreted per
-    element. Where the tokens are flattened anyway, filter the rows
-    after ``explode`` instead, as ``tokenize`` does.
+    ``array_remove`` is a plain expression, code-generated like the
+    rest of the projection; a ``filter`` lambda would be evaluated
+    interpreted per element. The Spark-SQL spelling is
+    ``array_remove(split(text, ' ', -1), '')``.
     """
-    return F.filter(F.split(text, " ", -1), lambda w: w != "")
+    return F.array_remove(F.split(text, " ", -1), "")
 
 
 def tokenize(df: DataFrame, text_col: str = "value") -> DataFrame:
     """Flatten lines/documents into one row per token (column ``word``).
 
-    Same tokens as ``explode(tokens_col(...))``, but the empty ones are
-    dropped by a row ``Filter`` after ``explode`` instead of the lambda
-    inside ``tokens_col``: both ``Generate`` and ``Filter`` are
-    whole-stage code-generated, the lambda is not (the
-    ``bootstrap_ci_poisson`` lesson in DEVNOTES).
+    Same tokens as ``explode(tokens_col(...))``; the empty ones are
+    dropped by a row ``Filter`` after ``explode``. Both ``Generate``
+    and ``Filter`` are whole-stage code-generated; no per-element
+    lambda runs (the ``bootstrap_ci_poisson`` lesson in DEVNOTES).
     """
     words = df.select(F.explode(F.split(F.col(text_col), " ", -1)).alias("word"))
     return words.where(F.col("word") != "")

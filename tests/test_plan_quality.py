@@ -604,13 +604,14 @@ def _corpus(tmp_path, n_files=4):
     return paths
 
 
-def test_cli_sink_single_partition_sort_no_range_shuffle(spark, tmp_path):
+def test_cli_sink_single_partition_sort_no_range_shuffle(spark, sf_dir, tmp_path):
     """The CLI's order comes from one single-partition exchange into the
     writing task, which sorts — no range-partition sampling job, no
-    range shuffle — and neither the CLI nor tokenize() evaluates a
-    lambda per token (the psi_binning/bootstrap_ci_poisson lesson)."""
+    range shuffle — and neither the CLI, tokenize() nor tokens_col
+    evaluates a lambda per token (the psi_binning/bootstrap_ci_poisson
+    lesson)."""
     from hadoop_wordcount_spark.cli import output_frame
-    from hadoop_wordcount_spark.operators.wordcount import tokenize
+    from hadoop_wordcount_spark.operators.wordcount import tokenize, tokens_col
     from hadoop_wordcount_spark.sources.textfiles import read_lines
 
     files = _corpus(tmp_path)
@@ -619,7 +620,10 @@ def test_cli_sink_single_partition_sort_no_range_shuffle(spark, tmp_path):
     assert plan.count("SinglePartition") == 1, plan
     assert "hashpartitioning(word" in plan, plan
     assert "lambdafunction" not in plan, plan
-    assert_not_in_plan(tokenize(read_lines(spark, files)), "lambdafunction")
+    lines = read_lines(spark, files)
+    assert_not_in_plan(tokenize(lines), "lambdafunction")
+    assert_not_in_plan(lines.select(tokens_col(F.col("value"))), "lambdafunction")
+    assert_not_in_plan(registry.QUERIES["text_stats"](spark, sf_dir), "lambdafunction")
 
 
 def test_cli_run_is_three_spark_jobs(spark, tmp_path):
