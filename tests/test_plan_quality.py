@@ -9,6 +9,8 @@ no cartesian products.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from hadoop_wordcount_spark import registry
@@ -641,3 +643,33 @@ def test_cli_run_is_three_spark_jobs(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
+
+
+def _perfbench_mix() -> list[str]:
+    import importlib.util
+
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "perfbench", "run.py")
+    spec = importlib.util.spec_from_file_location("perfbench_run", path)
+    module = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(module)
+    return module.MIX_QUERIES
+
+
+def test_codegen_cache_holds_the_perfbench_mix(spark):
+    """The perfbench llm_curation mix generates 113 distinct sources per
+    pass at sf0.001. With Spark's default 100-entry codegen cache the
+    second pass recompiles ~28 of them; the session's cache keeps them."""
+    from tests.conftest import SF_SMALL
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    names = _perfbench_mix()
+
+    def mix_compiles() -> int:
+        before = compiles.getCount()
+        for name in names:
+            registry.QUERIES[name](spark, SF_SMALL).toPandas()
+        return compiles.getCount() - before
+
+    mix_compiles()
+    assert mix_compiles() <= 5

@@ -18,6 +18,7 @@ import uuid
 import pytest
 
 from hadoop_wordcount_spark import registry
+from hadoop_wordcount_spark.session import _default_driver_memory
 from tests.conftest import SF_SMALL
 from tests.oracle_utils import compare_query
 
@@ -141,3 +142,41 @@ def test_sql_query_registers_every_view_it_reads(spark, name):
     fresh = spark.newSession()
     assert not [t for t in fresh.catalog.listTables() if t.isTemporary]
     registry.QUERIES[name](fresh, SF_SMALL).schema
+
+
+# --- driver heap default ----------------------------------------------
+
+GIB = 2**30
+
+
+@pytest.mark.parametrize(
+    "cgroup, files, heap",
+    [
+        # v2: the limit of the process's own cgroup.
+        ("0::/user.slice/job", {"sys/fs/cgroup/user.slice/job/memory.max": str(10 * GIB)}, "4g"),
+        # v1: a limit set on an ancestor applies to the leaf too.
+        ("4:memory:/docker/abc\n1:cpu:/",
+         {"sys/fs/cgroup/memory/docker/memory.limit_in_bytes": str(10 * GIB),
+          "sys/fs/cgroup/memory/docker/abc/memory.limit_in_bytes": "9223372036854771712"},
+         "4g"),
+        # Unlimited, as each version spells it: MemTotal decides.
+        ("0::/a\n4:memory:/a",
+         {"sys/fs/cgroup/a/memory.max": "max",
+          "sys/fs/cgroup/memory/a/memory.limit_in_bytes": "9223372036854771712"},
+         "6g"),
+        # No cgroup files at all.
+        (None, {}, "6g"),
+    ],
+    ids=["v2", "v1", "unlimited", "missing"],
+)
+def test_default_driver_memory_honours_cgroup_limit(tmp_path, cgroup, files, heap):
+    """40% of min(MemTotal, cgroup limit): a 10 GiB cgroup on a 15 GiB
+    host gets 4g, not 6g."""
+    (tmp_path / "proc" / "self").mkdir(parents=True)
+    (tmp_path / "proc" / "meminfo").write_text(f"MemTotal:       {15 * GIB // 1024} kB\n")
+    if cgroup is not None:
+        (tmp_path / "proc" / "self" / "cgroup").write_text(cgroup + "\n")
+    for rel, value in files.items():
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_text(value + "\n")
+    assert _default_driver_memory(str(tmp_path)) == heap
