@@ -34,7 +34,7 @@ def _sum_money(col) -> "F.Column":
     addition is order-independent — so a sum over thousands of terms
     cannot drift a last-ulp across the final 2-decimal rounding
     boundary under engine-specific partial-agg order (the way raw
-    double sums measurably did at sf0.01; DEVNOTES round 4). Pair
+    double sums measurably did at sf0.01; DEVNOTES.md decision 1). Pair
     with `_sum_money_sql` in the oracle."""
     return F.round(F.sum(F.round(col * 100, 0).cast("long")) / 100.0, 2)
 
@@ -4626,7 +4626,7 @@ def q_tpch_q1_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale (cents / ten-thousandths / millionths as BIGINT) and
     divides back once; averages derive from those integer sums over
     count(*), so no engine-order double drift anywhere (the repo's
-    `_sum_money` discipline, DEVNOTES round 4). The millionths ride
+    `_sum_money` discipline, DEVNOTES.md decision 1). The millionths ride
     bounds at ~2^37 per row — a 100 TB per-group sum stays inside
     BIGINT headroom (~2^63) through ~2^25 rows per partial-agg slot
     and the final agg adds at most shuffle.partitions terms per

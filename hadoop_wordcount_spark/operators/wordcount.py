@@ -74,7 +74,8 @@ def tokenize(df: DataFrame, text_col: str = "value") -> DataFrame:
     Same tokens as ``explode(tokens_col(...))``; the empty ones are
     dropped by a row ``Filter`` after ``explode``. Both ``Generate``
     and ``Filter`` are whole-stage code-generated; no per-element
-    lambda runs (the ``bootstrap_ci_poisson`` lesson in DEVNOTES).
+    lambda runs (DEVNOTES.md decision 7: higher-order functions
+    evaluate interpreted, per element).
     """
     words = df.select(F.explode(F.split(F.col(text_col), " ", -1)).alias("word"))
     return words.where(F.col("word") != "")
@@ -141,6 +142,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"SELECT word, count(*) AS count FROM ({_ORACLE_TOKENS}) GROUP BY word",
 )
 def q_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WordCount over documents.text: one (word, count) row per token."""
     return word_count(_docs(spark, sf_dir), text_col="text")
 
 
@@ -152,6 +154,7 @@ def q_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_word_count_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """WordCount ordered by word, the reference's output order."""
     return word_count_sorted(_docs(spark, sf_dir), text_col="text")
 
 
@@ -163,6 +166,7 @@ def q_word_count_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def q_top_k_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 20 most frequent tokens, ties broken by word."""
     return top_k_words(_docs(spark, sf_dir), k=20, text_col="text")
 
 
@@ -171,6 +175,7 @@ def q_top_k_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"SELECT count(DISTINCT word) AS n_words FROM ({_ORACLE_TOKENS})",
 )
 def q_distinct_words(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact count of distinct tokens in documents.text."""
     return distinct_words(_docs(spark, sf_dir), text_col="text")
 
 
@@ -229,6 +234,7 @@ def q_approx_distinct_words_bounds(
     ),
 )
 def q_grep_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed grep: the documents whose text contains 'spark'."""
     return (
         grep_filter(_docs(spark, sf_dir), "spark", text_col="text")
         .select("doc_id", "lang", "source")

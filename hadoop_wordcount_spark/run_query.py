@@ -6,7 +6,11 @@
     python -m hadoop_wordcount_spark.run_query --list
 
 The registry exposes every operator in COVERAGE.md; this is the
-user-facing way to run them outside the driver harness. Without
+user-facing way to run them outside the driver harness. ``--list``
+prints each query's name, its check mode ("oracle" = DuckDB
+hash-checked, "rows-only" = bounded by a dedicated pytest) and the
+first line of its docstring; ``--explain`` prints the formatted
+physical plan before the result. Without
 ``--out`` the first ``--limit`` rows print to stdout; with it, the
 FULL result writes to the given path (parallel writers — no
 driver-side collect).
@@ -15,6 +19,7 @@ driver-side collect).
 from __future__ import annotations
 
 import argparse
+import inspect
 import sys
 
 from hadoop_wordcount_spark import registry
@@ -36,8 +41,9 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.list:
         for name in sorted(registry.QUERIES):
-            mark = "oracle" if name in registry.ORACLES else "rows-only"
-            print(f"{name:32s} [{mark}]")
+            mark = "[oracle]" if name in registry.ORACLES else "[rows-only]"
+            summary = (inspect.getdoc(registry.QUERIES[name]) or "").split("\n", 1)[0]
+            print(f"{name:32s} {mark:11s} {summary}")
         return 0
     if not args.name:
         parser.error("query name required (or --list)")

@@ -1,10 +1,10 @@
-"""Lakehouse table-format connectors (Delta Lake / Iceberg / Hudi).
+"""Lakehouse table-format connectors (Delta Lake / Iceberg), plus the
+Avro format and a JDBC V2 catalog that work with the bundled jars.
 
-These formats need their runtime jars on the Spark classpath; this
-container ships none of them, so the connectors are import-gated
+Delta and Iceberg need their runtime jars on the Spark classpath;
+this container ships none of them, so their readers are import-gated
 stubs that fail loudly with setup instructions instead of failing
-obscurely at plan time. The read/write API mirrors the parquet
-sources so swapping formats is a one-line change for callers.
+obscurely at plan time.
 """
 
 from __future__ import annotations
@@ -28,14 +28,6 @@ def read_delta(spark: SparkSession, path: str) -> DataFrame:
     except ImportError as exc:
         raise NotImplementedError(_DELTA_HINT) from exc
     return spark.read.format("delta").load(path)
-
-
-def write_delta(df: DataFrame, path: str, mode: str = "error") -> None:
-    try:
-        import delta  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(_DELTA_HINT) from exc
-    df.write.format("delta").mode(mode).save(path)
 
 
 def read_iceberg(spark: SparkSession, table: str) -> DataFrame:
@@ -69,14 +61,6 @@ def avro_format(spark: SparkSession) -> str:
         return _AVRO_CLASS
     except Exception as exc:
         raise NotImplementedError(_AVRO_HINT) from exc
-
-
-def read_avro(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.format(avro_format(spark)).load(path)
-
-
-def write_avro(df: DataFrame, path: str, mode: str = "error") -> None:
-    df.write.format(avro_format(df.sparkSession)).mode(mode).save(path)
 
 
 _JDBC_CATALOG = "jdbccat"

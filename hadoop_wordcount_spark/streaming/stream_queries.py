@@ -129,6 +129,7 @@ def windowed_event_counts(events: DataFrame) -> DataFrame:
     """,
 )
 def q_streaming_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hourly event counts and value sums per event_type, streamed."""
     return run_to_memory(windowed_event_counts(events_stream(spark, sf_dir)))
 
 

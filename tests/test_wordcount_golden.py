@@ -6,6 +6,7 @@ errorifexists guard."""
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 
@@ -137,11 +138,21 @@ def test_connector_stubs_fail_loudly(spark):
     assert avro_format(spark).endswith("AvroFileFormat")
 
 
-def test_run_query_cli(spark, tmp_path):
+def test_run_query_cli(spark, tmp_path, capsys):
     from hadoop_wordcount_spark.run_query import main as rq_main
 
     assert rq_main(["--list"]) == 0
-    assert rq_main(["word_count", "--sf-dir", "/root/testdata/sf0.001", "--limit", "3"]) == 0
+    listing = capsys.readouterr().out
+    assert re.search(
+        r"^agg_multi +\[oracle\] +TPC-H Q1-shaped multi-aggregate scan\.$",
+        listing,
+        re.M,
+    ), listing[:500]
+    assert rq_main(["word_count", "--sf-dir", "/root/testdata/sf0.001", "--limit", "3",
+                    "--explain"]) == 0
+    plan = capsys.readouterr().out
+    # The combiner the reference never configured: partial + final aggregate.
+    assert "partial_count(1)" in plan and plan.count("HashAggregate") >= 2, plan
     out = str(tmp_path / "res")
     assert rq_main(["distinct_words", "--sf-dir", "/root/testdata/sf0.001",
                     "--out", out, "--format", "json"]) == 0

@@ -871,7 +871,8 @@ def _write_md(store: dict) -> None:
         "order-dependent (6.0 s warm at 64x vs 57.3 s partially-warm "
         "at 256x read as a fake alpha 1.63; solo the ladder is "
         "coherent at ~1.05, and the marginal argmax on a warm banded "
-        "build is ~12 s at 256x — see DEVNOTES r12). "
+        "build is ~12 s at 256x — see the round-12 log in "
+        "`git show 1042d21:DEVNOTES.md`). "
         "dedup_embedding_cosine_ivf runs with IVF_K = sqrt(n_vecs) "
         "(its docstring's scale rule): single-probe IVF with exact "
         "within-cell scoring is Theta(n^1.5) at optimal K by design — "
@@ -895,16 +896,18 @@ def _write_md(store: dict) -> None:
         "historical @K64 rows measured the same regime before the "
         "pin, under the r10 (pre-Arrow-kernel) assignment plan. "
         "Rows measured from round 11 on also benefit from the "
-        "os.sync() writeback settle after replication (see DEVNOTES "
-        "r11 — short-op rows from earlier rounds could be billed for "
-        "replica writeback IO, e.g. lineitem_weighted_median).",
+        "os.sync() writeback settle after replication (see the "
+        "round-11 log in `git show 1042d21:DEVNOTES.md` — short-op "
+        "rows from earlier rounds could be billed for replica "
+        "writeback IO, e.g. lineitem_weighted_median).",
         "",
         "alpha: observed exponent in t ~ docs^alpha — least-squares over "
         "all factors (biased low by fixed job overhead at small N) and "
         "the last-step slope (the asymptotic read). ~1 linear, ~2 "
         "quadratic.", "",
         "Measurement noise: this host shows periodic hypervisor "
-        "CPU-steal windows (DEVNOTES) that can inflate whichever factor "
+        "CPU-steal windows (round logs in `git show "
+        "1042d21:DEVNOTES.md`) that can inflate whichever factor "
         "is running 2-5x. Cross-check both alpha columns; the "
         "least-squares fit absorbs a single contaminated factor.", "",
         "| operator | " + " | ".join(f"{f}x s" for f in factors)
