@@ -7502,7 +7502,6 @@ _BS_BLOCK = 8
 # (prime so every odd per-resample multiplier is invertible and the
 # mixed draws stay uniform): P(<=k), k=0..5; draw >= 1008 -> w=6.
 _BS_THRESH = (371, 742, 928, 990, 1005, 1008)
-_BS_THRESH_SQL = ", ".join(str(t) for t in _BS_THRESH)
 _BS_P1 = 100003  # first reduction prime (keeps the mix overflow-safe)
 _BS_P2 = 1009  # draw modulus (prime)
 _BS_MIXC = 40503  # additive mixing constant

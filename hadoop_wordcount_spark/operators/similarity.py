@@ -513,8 +513,8 @@ def ivf_assignments(
     regime `ann_recall_report` registers).
 
     Shared by `ann_ivf_search` (cell-pruned query answering) and
-    `dedup_embedding_cosine_ivf` (cell-blocked pair generation); both
-    oracles train the identical quantizer via `_ivf_assign_ctes`.
+    `dedup_embedding_pq` (cell-blocked pair generation), among others;
+    their oracles train the identical quantizer via `_ivf_assign_ctes`.
 
     Scale shape per stage, at 100 TB:
     - assignment: SHUFFLE-FREE — an Arrow-vectorized kernel closes
@@ -532,11 +532,13 @@ def ivf_assignments(
     engines so double-summation ulp noise cannot flip an assignment;
     ties break on cid.
 
-    The trained pair is MEMOIZED per (session, sf_dir, K): five
-    queries (ann_ivf_search, dedup_embedding_cosine_ivf,
-    knn_block_join, embedding_cell_stats, semdedup_prune) share one
-    quantizer, and at 100 TB you train it once and reuse it — the
-    memo is that design in-process. `reset_ivf_memo()` drops it
+    The trained pair is MEMOIZED per (session, sf_dir, K): six
+    queries (ann_ivf_search, embedding_cell_stats,
+    contrastive_hard_negatives, cluster_topic_terms,
+    dedup_embedding_pq, semdedup_prune) share one quantizer at IVF_K
+    (ann_recall_report reaches the memo through `_ivf_search` at its
+    pinned ANN_RECALL_K), and at 100 TB you train it once and reuse
+    it — the memo is that design in-process. `reset_ivf_memo()` drops it
     (perfbench's worker calls this between passes so per-pass
     costs stay honest);
     keying on applicationId makes entries from a stopped session
@@ -735,7 +737,7 @@ def q_embedding_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF cell-population audit: per quantizer cell, member count,
     share of the corpus, and mean vector norm — the balance report
     that decides whether an ANN index is usable (one mega-cell means
-    `ann_ivf_search`/`dedup_embedding_cosine_ivf` degrade toward
+    `ann_ivf_search`/`dedup_embedding_pq` degrade toward
     brute force within it; empty cells waste nprobe budget). Standard
     operational telemetry for IVF indexes.
 
@@ -875,8 +877,6 @@ def q_embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hard_negatives_oracle() -> str:
     """Same-cell cross-label pairs via the shared quantizer CTEs,
     top-20 by cosine."""
-    from hadoop_wordcount_spark.operators.dedup import _ivf_cosine_oracle  # noqa: F401
-
     ctes, _ = _ivf_assign_ctes()
     return f"""
         WITH {ctes},

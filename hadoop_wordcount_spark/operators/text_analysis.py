@@ -1496,7 +1496,7 @@ def q_kl_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_ROUNDS = 6
 
 
-def _bpe_ctes(word_col: str = "word") -> tuple[str, str, list[str]]:
+def _bpe_ctes() -> tuple[str, str, list[str]]:
     """(CTE chain, final word-table name, per-round merge selects) for
     the unrolled BPE trainer in DuckDB — ONE template shared by the
     training and the encoding oracle, so the two can never diverge

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import argparse
 import inspect
+import os
 import sys
 
 from hadoop_wordcount_spark import registry
@@ -40,10 +41,18 @@ def main(argv: list[str] | None = None) -> int:
     args = parser.parse_args(argv)
 
     if args.list:
-        for name in sorted(registry.QUERIES):
-            mark = "[oracle]" if name in registry.ORACLES else "[rows-only]"
-            summary = (inspect.getdoc(registry.QUERIES[name]) or "").split("\n", 1)[0]
-            print(f"{name:32s} {mark:11s} {summary}")
+        try:
+            for name in sorted(registry.QUERIES):
+                mark = "[oracle]" if name in registry.ORACLES else "[rows-only]"
+                summary = (inspect.getdoc(registry.QUERIES[name]) or "").split("\n", 1)[0]
+                print(f"{name:32s} {mark:11s} {summary}")
+            sys.stdout.flush()
+        except BrokenPipeError:
+            # The reader went away (`--list | head`). Point stdout at
+            # devnull so the interpreter's exit-time flush cannot raise
+            # again (the idiom from the Python `signal` docs).
+            os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())
+            return 1
         return 0
     if not args.name:
         parser.error("query name required (or --list)")

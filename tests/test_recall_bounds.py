@@ -1,22 +1,17 @@
-"""Quality bounds for the seeded/sketched rows-only queries.
+"""Quality bounds for the approximate near-neighbour queries.
 
 Round-4 verdict: `sim_search_lsh` was the one rows-only registry
-entry with neither an oracle, an exact twin, nor a pytest bound, and
-the MinHash ML demo's recall-lean operating point was unbounded. These
-tests close both gaps, using the same pattern as
+entry with neither an oracle, an exact twin, nor a pytest bound. Its
+recall is bounded here, and so is the banded MinHash dedup's recall
+on a planted near-dup corpus, whose truth is known by construction
+(the sf-table oracle cannot plant one). Same pattern as
 `test_ivf_ann_recall_vs_brute_force` (tests/test_properties.py):
 approximate result vs exact ground truth, recall floor asserted.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-from pyspark.sql import functions as F
-
 from hadoop_wordcount_spark import registry
-from hadoop_wordcount_spark.operators.dedup import minhash_lsh_ml_demo
-from tests.conftest import SF_SMALL
 
 registry.load_all()
 
@@ -49,42 +44,31 @@ def test_sim_search_lsh_recall_vs_brute_force(spark, sf_dir):
     assert len(approx & exact) / len(exact) >= 0.8
 
 
-def _sample_ids(n: int, lo: int = 0):
-    """doc_ids inside the MinHash ML demo's deterministic 25% hash-bucket
-    sample (md5 bucket < '40'), so every planted doc participates."""
-    out = []
-    i = lo
-    while len(out) < n:
-        if hashlib.md5(str(i).encode()).hexdigest()[:2] < "40":
-            out.append(i)
-        i += 1
-    return out
-
-
 def test_dedup_minhash_recall_on_planted_near_dups(spark, tmp_path):
     """Plant 20 high-Jaccard near-dup pairs among mutually-dissimilar
-    base docs; the ML MinHashLSH operating point (4 OR-amplified
-    tables, threshold 0.5) must recover >= 0.8 of them and must not
-    report any cross-base pair (precision on the planted corpus)."""
+    base docs; the registered banded MinHash path must recover >= 0.8
+    of them and must not report any cross-base pair (precision on the
+    planted corpus)."""
     import pandas as pd
 
-    ids = _sample_ids(40)
     docs = []
     planted = set()
     for k in range(20):
         base_tokens = [f"w{k}x{j}" for j in range(30)]
         dup_tokens = list(base_tokens)
         dup_tokens[15] = f"q{k}"  # one-token edit: shingle sim ~0.84
-        a, b = ids[2 * k], ids[2 * k + 1]
+        a, b = 2 * k, 2 * k + 1
         docs.append((a, " ".join(base_tokens), "en", "src1", 200))
         docs.append((b, " ".join(dup_tokens), "en", "src1", 200))
-        planted.add((min(a, b), max(a, b)))
+        planted.add((a, b))
     pd.DataFrame(
         docs, columns=["doc_id", "text", "lang", "source", "n_chars"]
     ).to_parquet(tmp_path / "documents.parquet")
     got = {
         (r["doc_a"], r["doc_b"])
-        for r in minhash_lsh_ml_demo(spark, str(tmp_path)).collect()
+        for r in registry.QUERIES["dedup_minhash_banded"](
+            spark, str(tmp_path)
+        ).collect()
     }
     assert len(got & planted) / len(planted) >= 0.8
     assert got <= planted  # disjoint vocabularies -> no false pairs

@@ -1,42 +1,14 @@
-"""Round-10 pins: the dedup_embedding_cosine_ivf demotion (r9 verdict
-#4 option b) and the dedup_edit_verify pre-filter trim (r9 verdict
-#5)."""
+"""Round-10 pins: each round-10 query checked against a direct
+computation, a pure-Python model or its own accounting identities."""
 
 from __future__ import annotations
 
 import bisect
 
 from hadoop_wordcount_spark import registry
-from hadoop_wordcount_spark.operators.dedup import (
-    IVF_COSINE_ORACLE,
-    q_dedup_embedding_cosine_ivf,
-)
 from tests.conftest import SF_SMALL
-from tests.oracle_utils import compare_query
 
 registry.load_all()
-
-
-def test_ivf_cosine_demoted_but_oracle_green(spark):
-    """Deregistered in round 10 (exact within-cell scoring has no
-    scale-safe IVF operating point — measured ladder last-step alpha
-    1.66 vs the 1.5 design bar; `dedup_embedding_pq` is the
-    registered representative at 0.69). Still hash-matches its ANSI
-    oracle — the shared quantizer and cosine-scoring stages this
-    function exercises are the same ones the PQ path builds on,
-    exactly mirroring the round-6 `labelblocked_embedding_cosine`
-    precedent."""
-    assert "dedup_embedding_cosine_ivf" not in registry.QUERIES
-    assert "dedup_embedding_cosine_ivf" not in registry.ORACLES
-    assert "dedup_embedding_pq" in registry.ORACLES
-    err = compare_query(
-        spark,
-        SF_SMALL,
-        "dedup_embedding_cosine_ivf",
-        q_dedup_embedding_cosine_ivf,
-        IVF_COSINE_ORACLE,
-    )
-    assert err is None, err
 
 
 def test_srp_pairs_unique_and_scores_exact(spark):

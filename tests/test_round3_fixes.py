@@ -10,8 +10,6 @@
   string-set computation on the fixture corpus.
 - streaming_foreach_batch must return an empty (not raising) frame
   when the source produces zero micro-batches (ADVICE r2 #3).
-- the MinHash ML demo (de-registered in r7) must only ever touch its
-  deterministic 25% hash-bucket sample (VERDICT r2 next-step #7).
 - colocated_join must derive its partition count from
   spark.sql.shuffle.partitions, not a hard-coded width (VERDICT r2
   "what's wrong" #3).
@@ -30,7 +28,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from hadoop_wordcount_spark import registry
-from hadoop_wordcount_spark.operators.dedup import minhash_lsh_ml_demo
 
 registry.load_all()
 
@@ -123,20 +120,6 @@ def test_foreach_batch_empty_source_returns_empty(spark, tmp_path):
     assert {f.name for f in df.schema.fields} == {
         "window_start_s", "event_type", "n", "sum_value",
     }
-
-
-def test_dedup_minhash_runs_on_hash_bucket_sample(spark):
-    """Every doc id in the demo's output must fall inside the
-    deterministic 25% bucket (md5 prefix < '40') — the sample is a
-    pure function of the key, never a seeded RNG."""
-    pairs = minhash_lsh_ml_demo(spark, SF_SMALL)
-    ids = pairs.select(F.col("doc_a").alias("i")).union(
-        pairs.select(F.col("doc_b").alias("i"))
-    )
-    outside = ids.filter(
-        F.substring(F.md5(F.col("i").cast("string")), 1, 2) >= "40"
-    )
-    assert outside.count() == 0
 
 
 def test_colocated_join_has_no_hardcoded_partition_count():

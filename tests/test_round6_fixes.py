@@ -1,15 +1,10 @@
 """Round-6 fixes, pinned:
 
-1. `dedup_embedding_cosine` demoted from the registry (judge: label
-   blocks grow quadratically at 100x) — the label-blocked form
-   survives ONLY as this oracle cross-check of the shared cosine
-   scoring stage; the registered family entry is the IVF-blocked
-   plan.
-2. `budget_largest_remainder` uses integer `div`, which cannot drift
+1. `budget_largest_remainder` uses integer `div`, which cannot drift
    vs the oracle's `//` past 2^53 the way floor(double /) can.
-3. `incremental_agg_maintenance`'s base/delta split is exhaustive
+2. `incremental_agg_maintenance`'s base/delta split is exhaustive
    under NULL dates.
-4. `JsonlDirWriter.commit()` sweeps orphan `_tmp-*.jsonl` files left
+3. `JsonlDirWriter.commit()` sweeps orphan `_tmp-*.jsonl` files left
    by tasks that died before reporting a commit message.
 """
 
@@ -20,33 +15,10 @@ import os
 from pyspark.sql import Row, functions as F
 
 from hadoop_wordcount_spark import registry
-from hadoop_wordcount_spark.operators.dedup import (
-    LABELBLOCKED_COSINE_ORACLE,
-    labelblocked_embedding_cosine,
-)
-from oracle_utils import compare_query
 
 registry.load_all()
 
 SF_SMALL = "/root/testdata/sf0.001"
-
-
-def test_labelblocked_cosine_demoted_but_oracle_green(spark):
-    """Not registered; still hash-matches its ANSI oracle (the cosine
-    scoring stage is shared with the registered IVF plan)."""
-    assert "dedup_embedding_cosine" not in registry.QUERIES
-    # Round 10 demoted the IVF variant too (r9 verdict #4); the
-    # registered embedding-dedup representative is now the PQ path.
-    assert "dedup_embedding_cosine_ivf" not in registry.QUERIES
-    assert "dedup_embedding_pq" in registry.QUERIES
-    err = compare_query(
-        spark,
-        SF_SMALL,
-        "labelblocked_embedding_cosine",
-        labelblocked_embedding_cosine,
-        LABELBLOCKED_COSINE_ORACLE,
-    )
-    assert err is None, err
 
 
 def test_integer_div_exact_past_double_precision(spark):

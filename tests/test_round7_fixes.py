@@ -1,11 +1,5 @@
 """Round-7 verdict-directed fixes, pinned.
 
-- The MinHash ML-API demo is OUT of the registry (the r6 verdict's
-  last sampled-output entry): the registered dedup family carries only
-  full-relation paths, and the demo survives as
-  `operators.dedup.minhash_lsh_ml_demo` with its recall bound intact
-  (tests/test_recall_bounds.py) — exactly the r6 treatment of
-  `dedup_embedding_cosine`.
 - `ranking.global_*` accept a caller-supplied `size_hint` (a
   statically-known row upper bound) that skips the runtime cache+count
   probe: results must be identical on every (hint, threshold) path,
@@ -25,17 +19,6 @@ from hadoop_wordcount_spark.operators.ranking import (
 )
 
 registry.load_all()
-
-
-def test_minhash_ml_demo_not_registered():
-    """No registry entry may return a SAMPLE of its relation. The ML
-    MinHashLSH demo ran on a 25% hash-bucket cut; since round 7 it is
-    pytest-only and the full-relation `dedup_minhash_banded` is the
-    family's registered path."""
-    assert "dedup_minhash" not in registry.QUERIES
-    assert "dedup_minhash" not in registry.ORACLES
-    assert "dedup_minhash_banded" in registry.ORACLES
-    from hadoop_wordcount_spark.operators.dedup import minhash_lsh_ml_demo  # noqa: F401
 
 
 def _events(spark, sf_dir, n=500):

@@ -10,8 +10,8 @@ registered entry.
   sum to |events|, shares sum to 1).
 - class_balance_weights: weights are positive and normalized to the
   class count; more populous classes never get a larger weight.
-- dedup_embedding_pq: candidates are a subset of the IVF variant's
-  (the PQ code key only ever refines the cell key).
+- dedup_embedding_pq: every reported pair shares an IVF cell (the PQ
+  code key only ever refines the cell key).
 """
 
 from __future__ import annotations

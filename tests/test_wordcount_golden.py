@@ -5,8 +5,11 @@ errorifexists guard."""
 
 from __future__ import annotations
 
+import fcntl
 import os
 import re
+import subprocess
+import sys
 
 import pytest
 
@@ -157,6 +160,25 @@ def test_run_query_cli(spark, tmp_path, capsys):
     assert rq_main(["distinct_words", "--sf-dir", "/root/testdata/sf0.001",
                     "--out", out, "--format", "json"]) == 0
     assert rq_main(["nope"]) == 2
+
+    # `--list | head -1`: a reader that leaves early must not make the
+    # lister print a BrokenPipeError traceback. The pipe is shrunk to
+    # one page so the lister is still writing when the reader closes.
+    r, w = os.pipe()
+    fcntl.fcntl(r, fcntl.F_SETPIPE_SZ, 4096)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.Popen(
+        [sys.executable, "-m", "hadoop_wordcount_spark.run_query", "--list"],
+        cwd=repo, stdout=w, stderr=subprocess.PIPE,
+    )
+    os.close(w)
+    with os.fdopen(r, "rb") as reader:
+        first = reader.readline()
+    err = child.stderr.read().decode()
+    child.stderr.close()
+    assert child.wait(timeout=120) == 1
+    assert first.decode() == listing.splitlines(keepends=True)[0], first
+    assert "Traceback" not in err, err
 
 
 def test_read_lines_with_offsets(spark, corpus_file):

@@ -29,12 +29,13 @@ operator scaling, not planted quadratic duplication):
   structure per user is preserved and users never mix across
   replicas.
 
-For `dedup_embedding_cosine_ivf` the probe additionally sets
-IVF_K = max(8, floor(sqrt(n_vecs))) per factor — the docstring's own
-"K ~ sqrt(n) keeps expected cell population bounded" operating rule.
-Single-probe IVF with exact within-cell scoring is Theta(n*K + n^2/K)
-= Theta(n^1.5) at the optimal K: the expected exponent is ~1.5 by
-design (vs 2.0 brute force), not ~1.0 — the probe verifies THAT bound.
+For the IVF consumers (semdedup_prune, dedup_embedding_pq, ...) the
+probe additionally sets IVF_K = max(8, floor(sqrt(n_vecs))) per
+factor — the "K ~ sqrt(n) keeps expected cell population bounded"
+operating rule. Exact scoring over whole cells would be
+Theta(n*K + n^2/K) = Theta(n^1.5) at the optimal K; each consumer's
+own blocking (semdedup's id-rank cell cap, the PQ code tuple) is what
+keeps its pair stage below that bound, and the probe measures it.
 
 For each operator the probe fits the observed scaling exponent
 alpha in t ~ docs^alpha two ways: a least-squares fit over all
@@ -86,17 +87,14 @@ ALL_OPS = [
     "word_count", "dedup_exact", "text_stats_agg",
     "repeated_spans", "dedup_minhash_banded", "dedup_clusters",
     "dedup_simhash_pairs", "pagerank_bigram", "decontaminate_vs_eval",
-    # round-4 additions (dedup_embedding_cosine_ivf was DEREGISTERED
-    # in round 10 — r9 verdict #4 option b; its ladder rows stay in
-    # the store as history and the op stays probe-able via
-    # DEMOTED_OPS for cross-checks)
+    # round-4 additions
     "chunk_dedup", "dedup_incremental", "dedup_cluster_representatives",
-    "event_path_mining", "dedup_embedding_cosine_ivf",
+    "event_path_mining",
     # round-5 additions
     "dedup_containment", "winnowing_fingerprint", "event_cooccurrence_lift",
     # round-5 continuation (semdedup/power-iteration run under the
-    # same IVF_K = sqrt(n_vecs) rule as dedup_embedding_cosine_ivf;
-    # expected exponents: semdedup ~1.5 by design, the rest ~1)
+    # IVF_K = sqrt(n_vecs) rule; expected exponents: semdedup ~1.5
+    # by design, the rest ~1)
     "semdedup_prune", "dsir_importance_weight",
     "embedding_power_iteration", "bigram_triangle_count",
     # vocab-bounded / scan-bounded continuation ops (expected ~1):
@@ -345,7 +343,7 @@ ALL_OPS = [
     # round-9: PQ-code-refined vector dedup (r8 verdict #4). Runs
     # under the same IVF_K = sqrt(n_vecs) rule; candidate blocks are
     # the IVF cell intersected with the 256-way PQ code partition, so
-    # the expected exponent sits BELOW dedup_embedding_cosine_ivf's
+    # the expected exponent sits BELOW cell-only blocking's
     # ~1.5-by-design (the code tuple splits every cell block ~256
     # ways; the measured pair volume is ~2 orders of magnitude
     # smaller). semdedup_prune re-probes under its new
@@ -428,16 +426,6 @@ ALL_OPS = [
     # partition-local windows — the zipf/bpe vocab-bounded class)
     "value_moments_by_type", "nucleus_vocab_cut",
 ]
-
-# Deregistered queries that remain ladder-probe-able (pytest-only
-# cross-checks): resolved here when registry.QUERIES misses.
-from hadoop_wordcount_spark.operators.dedup import (  # noqa: E402
-    q_dedup_embedding_cosine_ivf,
-)
-
-DEMOTED_OPS = {
-    "dedup_embedding_cosine_ivf": q_dedup_embedding_cosine_ivf,
-}
 
 # Ops that read the relational fact tables — their presence in a
 # probe run triggers `_replicate_relational` (orders/lineitem/
@@ -803,7 +791,7 @@ def main() -> None:
             if n > MAX_FACTOR.get(q, 1 << 30):
                 continue
             src = shift_path if q in TIME_SHIFT_OPS else path
-            fn = registry.QUERIES.get(q) or DEMOTED_OPS[q]
+            fn = registry.QUERIES[q]
             timed(q, lambda fn=fn, src=src: _noop(fn(spark, src)))
         # Caches (banded-pair stage, IVF vecs) must not leak across
         # factors: each measurement pays its own featurization and
@@ -873,16 +861,17 @@ def _write_md(store: dict) -> None:
         "coherent at ~1.05, and the marginal argmax on a warm banded "
         "build is ~12 s at 256x — see the round-12 log in "
         "`git show 1042d21:DEVNOTES.md`). "
-        "dedup_embedding_cosine_ivf runs with IVF_K = sqrt(n_vecs) "
-        "(its docstring's scale rule): single-probe IVF with exact "
-        "within-cell scoring is Theta(n^1.5) at optimal K by design — "
-        "~1.5, not ~1.0, is its pass bar (brute force is 2.0). "
-        "Quantizer billing (round 9): dedup_embedding_cosine_ivf runs "
-        "FIRST in its factor group and pays the shared k-means "
-        "training; semdedup_prune / cluster_topic_terms / "
-        "dedup_embedding_pq consume the warm memo, so their rows are "
-        "MARGINAL cost — the per-operator work their fixes bound "
-        "(semdedup's id-rank cell cap, the shuffle-joined word "
+        "The IVF consumers run with IVF_K = sqrt(n_vecs) (the "
+        "quantizer's scale rule): exact scoring over whole cells "
+        "would be Theta(n^1.5) at optimal K, so each consumer's own "
+        "blocking is what its row measures. "
+        "Quantizer billing: semdedup_prune runs FIRST of the IVF "
+        "consumers in its factor group and pays the shared k-means "
+        "training (its stored rows predate that order: a since-removed "
+        "cell-blocked cosine op ran first then, so they are marginal "
+        "cost too); cluster_topic_terms / dedup_embedding_pq consume "
+        "the warm memo, so their rows are MARGINAL cost — the "
+        "per-operator work their fixes bound (the shuffle-joined word "
         "marginal, the PQ-code-refined pair blocks). Rows suffixed "
         "@K<k> come from the --ivf-k-fixed production-regime "
         "sub-ladder: the quantizer K is HELD FIXED across factors "
